@@ -21,27 +21,6 @@ from collections import defaultdict
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-# Families mirrored from pkg/metrics.go (ingest/stream/serving subset that
-# has a meaning in this engine; sink families emitted by the parquet sink).
-COUNTERS = (
-    "roar_kafka_messages_total",          # metrics.go: messages consumed
-    "roar_kafka_bytes_received_total",
-    "roar_record_batches_created_total",
-    "roar_stream_records_processed_total",
-    "roar_stream_records_dropped_total",
-    "roar_expired_streams_total",
-    "roar_flight_stream_requests_total",
-    "roar_flight_streaming_errors_total",
-    "roar_duckdb_insert_rows_total",
-)
-GAUGES = (
-    "roar_active_streams",
-    "roar_stream_memory_bytes",
-    "roar_stream_buffer_utilization_percent",
-    "roar_kafka_messages_pending",
-    "roar_processing_latency_seconds",
-)
-
 
 class MetricsRegistry:
     """Thread-safe labeled counters/gauges + Prometheus text exposition."""

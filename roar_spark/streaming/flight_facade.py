@@ -20,11 +20,13 @@ Surface parity (SURVEY.md §2 A22-A26):
 - DoAction     → "health" → "OK"; "listTopics" → comma-joined names;
   anything else → NOT_IMPLEMENTED (flight/server.go:233-245)
 
-The data path is Arrow end-to-end: store snapshot → ``df.toArrow()`` →
-Flight IPC — the same columnar hand-off the reference does from its
-buffered RecordBatches. Optional component: the engine is fully usable
-without it (Spark Connect / temp views are the Spark-native serving path);
-this exists so a reference Flight CLIENT can point at this engine instead.
+The data path is Arrow end-to-end and Spark-free: every DoGet streams
+the store's cached Arrow snapshot (``snapshot_arrow``, one per store
+version) through Flight IPC — the same columnar hand-off the reference
+does from its buffered RecordBatches. Optional component: the engine is
+fully usable without it (Spark Connect / temp views are the Spark-native
+serving path); this exists so a reference Flight CLIENT can point at
+this engine instead.
 """
 
 from __future__ import annotations
@@ -47,9 +49,9 @@ class RoarFlightServer(flight.FlightServerBase):
     drop-oldest eviction still removes a PREFIX of every shard's
     subsequence and the per-range offset model stays valid), and the
     ``hwm`` DoAction serves the O(1) global high-water mark the sharded
-    streaming source polls per trigger (sources/flight.py). Shard DoGets
-    are served from ONE cached Arrow materialization per store version —
-    N executors reading in parallel cost one snapshot, not N."""
+    streaming source polls per trigger (sources/flight.py). Every DoGet,
+    plain or shard, is served from ONE cached Arrow materialization per
+    store version — N readers in parallel cost one snapshot, not N."""
 
     def __init__(
         self, engine: StreamEngine, location: str = "grpc://0.0.0.0:0", shards: int = 1
@@ -63,8 +65,8 @@ class RoarFlightServer(flight.FlightServerBase):
         self._serve_thread: threading.Thread | None = None
         self._serve_error: BaseException | None = None
         # topic → (store identity, store.version, arrow table): one
-        # materialization serves the hwm poll + all shard DoGets of a
-        # trigger. Keyed on the store OBJECT too — a TTL-revived stream's
+        # materialization serves the hwm poll + every DoGet of a store
+        # version. Keyed on the store OBJECT too — a TTL-revived stream's
         # fresh store restarts version at 0 and must not hit stale cache.
         self._snap_cache: dict = {}
 
@@ -153,12 +155,12 @@ class RoarFlightServer(flight.FlightServerBase):
     def get_schema(self, context, descriptor):  # A24
         return flight.SchemaResult(self._arrow_schema(self._path_topic(descriptor)))
 
-    # -- sharded serving (see class doc) ------------------------------------
+    # -- serving (see class doc) --------------------------------------------
 
     def _snapshot_entry(self, topic: str) -> dict:
         """One Arrow materialization per store version (Spark-free —
         MemoryStore concat / ParquetStore pyarrow read), shared by the
-        hwm action and every shard DoGet of a trigger. Counts as a data
+        hwm action and every DoGet, plain or shard. Counts as a data
         read: TTL refresh + request counter via engine.touch. The entry
         also lazily carries the row-hash vector for shard filtering —
         computed ONCE per version, not once per DoGet (8 shards × a 2.2 s
@@ -288,9 +290,7 @@ class RoarFlightServer(flight.FlightServerBase):
             except (UnicodeDecodeError, ValueError):
                 spec = None
         if not isinstance(spec, dict) or "topic" not in spec:
-            # plain-topic ticket — the reference parity path, byte-for-byte
-            table = self._engine.fetch(raw.decode(), limit=-1).toArrow()
-            return flight.RecordBatchStream(table)
+            spec = {"topic": raw.decode()}  # plain-topic ticket (server.go:118)
         entry = self._snapshot_entry(spec["topic"])
         table = entry["table"]
         lo, hi = 0, table.num_rows
@@ -494,11 +494,12 @@ def fetch_topic(location: str, topic: str, limit: int = 10) -> pa.Table:
     instead of the endpoint list (read_topic's ``plain_on_sharded`` —
     endpoint concat order is shard order, so a head slice of it would be
     a content-hash-arbitrary subset where the reference client returns
-    the oldest buffered rows; r9 review). The plain ticket makes the
-    server materialize the ENTIRE buffer to serve a few head rows — that
-    is the reference's own client-side-limit semantics (the server always
-    streams the full buffer and the client truncates, cmd/client.go:193),
-    kept deliberately rather than optimized into a server-side limit."""
+    the oldest buffered rows; r9 review). The plain ticket streams the
+    ENTIRE buffer (the server's cached snapshot of it) to serve a few
+    head rows — that is the reference's own client-side-limit semantics
+    (the server always streams the full buffer and the client truncates,
+    cmd/client.go:193), kept deliberately rather than optimized into a
+    server-side limit."""
     limited = limit is not None and limit >= 0
     table = read_topic(location, topic, plain_on_sharded=limited)
     return table.slice(0, limit) if limited else table

@@ -23,8 +23,8 @@ Semantics matched (SURVEY.md §1.4, §2 A15-A28):
   buffer_max_bytes for long-held readers)
 - serving facade = the Flight surface re-expressed:
   list_streams (A22/A27), describe/get_schema (A23/A24), fetch+limit
-  (A25/A28 — limit is the reference client's only row operator), health +
-  list-topics actions (A26)
+  (A25/A28 — limit is the reference client's only row operator); the
+  health + list-topics actions (A26) are answered by the Flight facade
 
 Retention store design (engine-specific custom code — the one part of the
 reference Catalyst can't subsume, SURVEY.md §4):
@@ -73,8 +73,7 @@ class MemoryStore:
     """Driver-side Arrow buffer with drop-oldest byte cap (reference
     parity model; single-node by definition, like the reference)."""
 
-    def __init__(self, spark: SparkSession, schema: T.StructType, max_bytes: int) -> None:
-        self._spark = spark
+    def __init__(self, schema: T.StructType, max_bytes: int) -> None:
         self._schema = schema
         self._max_bytes = max_bytes
         self._batches: deque = deque()  # (arrow_table, nbytes)
@@ -84,7 +83,7 @@ class MemoryStore:
         self._lock = threading.Lock()
         # monotone mutation counter (append/evict/close): lets the Flight
         # facade cache one snapshot materialization per buffer state and
-        # serve N shard DoGets + the hwm action from it (flight_facade)
+        # serve every DoGet + the hwm action from it (flight_facade)
         self.version = 0
         # monotone EVICTION counter (front drop/close only): the facade's
         # positional trust checks key on this, not on a value-based head
@@ -117,19 +116,16 @@ class MemoryStore:
         return table.num_rows
 
     def snapshot(self, spark: SparkSession) -> DataFrame:
-        import pyarrow as pa
-
-        with self._lock:
-            tables = [t for t, _ in self._batches]
-        if not tables:
+        table = self.snapshot_arrow()
+        if not table.num_rows:
             return spark.createDataFrame([], self._schema)
-        return spark.createDataFrame(pa.concat_tables(tables))
+        return spark.createDataFrame(table)
 
     def snapshot_arrow(self) -> "object":
-        """Snapshot as an Arrow table WITHOUT a Spark round-trip — the
-        Flight facade's sharded-serving path (one materialization per
-        store version, N shard DoGets sliced from it). Zero-copy: the
-        buffered tables are already Arrow."""
+        """Snapshot as an Arrow table WITHOUT a Spark round-trip — what
+        every Flight DoGet serves (one materialization per store version,
+        shared by all readers). Zero-copy: the buffered tables are
+        already Arrow."""
         import pyarrow as pa
 
         with self._lock:
@@ -166,10 +162,9 @@ class ParquetStore:
     Executors write micro-batches straight to storage; the driver tracks
     only (batch_id, nbytes) metadata."""
 
-    def __init__(self, spark: SparkSession, schema: T.StructType, max_bytes: int, base: str) -> None:
+    def __init__(self, schema: T.StructType, max_bytes: int, base: str) -> None:
         import uuid
 
-        self._spark = spark
         self._schema = schema
         self._max_bytes = max_bytes
         self._base = base
@@ -265,25 +260,27 @@ class ParquetStore:
         return spark.read.schema(self._schema).parquet(*paths)
 
     def snapshot_arrow(self) -> "object":
-        """Snapshot as an Arrow table WITHOUT a Spark job — the Flight
-        facade's sharded-serving path. Reads the batch dirs with pyarrow
-        in append order (deterministic: sorted file listing per dir) and
-        casts to the stream's frozen schema so both stores serve
-        identical types. Single-process read by design: the facade is a
-        single-node serving veneer; the cluster-scale read of this store
-        is the snapshot() parquet scan."""
+        """Snapshot as an Arrow table WITHOUT a Spark job — what every
+        Flight DoGet serves. Reads the batch dirs with pyarrow in append
+        order (deterministic: sorted file listing per dir) and casts to
+        the ALL-NULLABLE form of the frozen schema, as Spark's parquet
+        read of them does: the data need not keep the frozen non-null
+        flags (a field missing from a message parses to NULL; nested
+        children are written nullable). An empty buffer serves the
+        frozen schema, like the empty snapshot(). Single-process read by
+        design: the facade is a single-node serving veneer; the
+        cluster-scale read of this store is the snapshot() parquet scan."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self._schema)
         with self._lock:
             paths = [p for p, _, _ in self._batches]
         if not paths:
-            return target.empty_table()
-        tables = [pq.read_table(p).cast(target) for p in paths]
-        return pa.concat_tables(tables)
+            return to_arrow_schema(self._schema).empty_table()
+        target = to_arrow_schema(self._schema._as_nullable())
+        return pa.concat_tables([pq.read_table(p).cast(target) for p in paths])
 
     @property
     def current_bytes(self) -> int:
@@ -382,10 +379,9 @@ class StreamEngine:
     def _make_store(self, topic: str, schema: T.StructType):
         if self._store_base:
             return ParquetStore(
-                self._spark, schema, self.config.buffer_limit_bytes,
-                os.path.join(self._store_base, topic),
+                schema, self.config.buffer_limit_bytes, os.path.join(self._store_base, topic)
             )
-        return MemoryStore(self._spark, schema, self.config.buffer_limit_bytes)
+        return MemoryStore(schema, self.config.buffer_limit_bytes)
 
     def register_converter(self, topic: str, converter, schema: T.StructType) -> None:
         """Per-topic custom converter hook — parity with the reference's
@@ -731,8 +727,8 @@ class StreamEngine:
     def touch(self, topic: str) -> StreamHandle:
         """Data-read bookkeeping without the snapshot: TTL refresh +
         request counter + per-topic gauges (§2.3.4 — the retention clock
-        is last activity). Shared by fetch() and the Flight facade's
-        cached sharded reads, which serve Arrow directly from the store
+        is last activity). Shared by fetch() and every Flight DoGet, which
+        serves the facade's cached Arrow snapshot directly from the store
         and must still count as activity."""
         handle = self._handle(topic)
         handle.last_updated = self._time()
@@ -748,9 +744,6 @@ class StreamEngine:
         handle = self.touch(topic)
         df = handle.store.snapshot(self._spark)
         return df.limit(limit) if limit is not None and limit >= 0 else df
-
-    def health(self) -> str:
-        return "OK"  # DoAction health (flight/server.go:236-239)
 
     def _handle(self, topic: str) -> StreamHandle:
         with self._lock:

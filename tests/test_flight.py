@@ -14,8 +14,13 @@ from roar_spark.streaming.manager import StreamEngine
 
 
 @pytest.fixture()
-def served_engine(spark, tmp_path):
-    engine = StreamEngine(spark, EngineConfig())
+def served_engine(request, spark, tmp_path):
+    # MemoryStore engine; parametrize indirectly with "parquet" for a
+    # ParquetStore (--store-dir) engine
+    parquet = getattr(request, "param", "memory") == "parquet"
+    engine = StreamEngine(
+        spark, EngineConfig(), store_base=str(tmp_path / "store") if parquet else None
+    )
     engine.register_stream("clicks", [json.dumps({"n": 1, "kind": "view"})])
     path = str(tmp_path / "data")
     write_envelope_file(
@@ -55,6 +60,64 @@ def test_fetch_unlimited_and_schema(served_engine):
     client = flight.connect(location)
     schema = client.get_schema(flight.FlightDescriptor.for_path("clicks")).schema
     assert "kafka_offset" in schema.names
+
+
+@pytest.mark.parametrize("served_engine", ["memory", "parquet"], indirect=True)
+def test_plain_doget_matches_spark_read(served_engine):
+    """A plain-ticket DoGet serves the store's cached Arrow snapshot: the
+    same schema, rows and order as the Spark read of the same buffer
+    (``engine.fetch(topic, -1).toArrow()``), on both stores, for a topic
+    with rows and for a registered topic with none."""
+    engine, location = served_engine
+    engine.register_stream("quiet", [json.dumps({"n": 1})])
+    client = flight.connect(location)
+    for topic, rows in (("clicks", 20), ("quiet", 0)):
+        served = client.do_get(flight.Ticket(topic.encode())).read_all()
+        expected = engine.fetch(topic, -1).toArrow()
+        assert served.num_rows == rows
+        assert served.schema == expected.schema
+        assert served.equals(expected)
+
+
+@pytest.mark.parametrize("served_engine", ["parquet"], indirect=True)
+def test_plain_doget_serves_append_order_on_parquet_store(served_engine, spark, tmp_path):
+    """Across several ParquetStore batches a plain DoGet serves append
+    order, so a limited fetch returns the oldest buffered rows (a Spark
+    scan of the batch dirs orders its splits by file size instead)."""
+    engine, location = served_engine
+    path = str(tmp_path / "more")
+    write_envelope_file(
+        path,
+        [
+            {"key": f"k{i}", "value": json.dumps({"n": i, "kind": "click" * 8}),
+             "timestamp": "2026-08-13T10:01:00Z", "offset": i, "partition": 0}
+            for i in range(20, 60)
+        ],
+    )
+    engine.append_batch("clicks", read_envelope_batch(spark, path))
+    for limit, rows in ((5, 5), (-1, 60)):
+        table = fetch_topic(location, "clicks", limit=limit)
+        assert table.column("kafka_offset").to_pylist() == list(range(rows))
+
+
+def test_plain_doget_runs_no_spark_job(served_engine, spark):
+    """A plain DoGet on a MemoryStore topic is served without a Spark job:
+    the status tracker records no job for the reading thread's group."""
+    from roar_spark.streaming.flight_facade import RoarFlightServer
+
+    engine, _ = served_engine
+    server = RoarFlightServer(engine)  # not started: serve in this thread
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "plain-doget-probe"
+    sc.setJobGroup(group, "plain DoGet")
+    try:
+        assert tracker.getJobIdsForGroup(group) == []
+        server.do_get(None, flight.Ticket(b"clicks"))
+        assert server._snapshot_table("clicks").num_rows == 20
+        assert tracker.getJobIdsForGroup(group) == []
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_flight_info_unbounded_totals(served_engine):

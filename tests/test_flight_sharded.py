@@ -240,18 +240,28 @@ def test_sharded_reader_offsets_and_partitions(monkeypatch):
 
 
 def test_snapshot_cache_per_store_version(spark):
-    """One Arrow materialization serves all shard DoGets of a version;
-    an append invalidates; a revived stream's fresh store (version
-    restarts at 0) must not hit the stale cache."""
+    """One Arrow materialization serves every DoGet of a version, plain
+    or shard; an append invalidates; a revived stream's fresh store
+    (version restarts at 0) must not hit the stale cache."""
     engine = StreamEngine(spark, EngineConfig())
     engine.register_stream("t", [json.dumps({"n": 1})])
     _feed(spark, engine, "t", 0, 5)
     server = RoarFlightServer(engine)  # not started: unit use
+    store = engine._handle("t").store
+    materialize = store.snapshot_arrow
+    calls = []
+    store.snapshot_arrow = lambda: calls.append(1) or materialize()
+    plain = flight.Ticket(b"t")
+    server.do_get(None, plain)
+    server.do_get(None, plain)
+    assert len(calls) == 1  # two plain DoGets, one materialization
     t1 = server._snapshot_table("t")
-    assert server._snapshot_table("t") is t1  # cache hit, same version
+    assert server._snapshot_table("t") is t1 and len(calls) == 1  # cache hit
     _feed(spark, engine, "t", 5, 8)
+    server.do_get(None, plain)
+    assert len(calls) == 2  # the append invalidated the plain read's entry
     t2 = server._snapshot_table("t")
-    assert t2 is not t1 and t2.num_rows == 8
+    assert t2 is not t1 and t2.num_rows == 8 and len(calls) == 2
     # fresh store identity (TTL revive path): cache keyed on store object
     handle = engine._handle("t")
     fresh = engine._make_store("t", handle.schema)
@@ -260,6 +270,50 @@ def test_snapshot_cache_per_store_version(spark):
     t3 = server._snapshot_table("t")
     assert t3 is not t2 and t3.num_rows == 0
     engine.stop()
+
+
+@pytest.mark.parametrize(
+    "infer_nested,payloads",
+    [
+        # a payload field missing from some messages parses to NULL, but
+        # the frozen schema marks it non-null
+        (False, [{"n": i, **({"opt": i} if i % 2 else {})} for i in range(12)]),
+        # nested inference: struct children are written nullable, frozen
+        # non-null
+        (True, [{"n": i, "s": {"a": i, "b": [i, i + 1]}} for i in range(12)]),
+    ],
+    ids=["missing-field", "nested"],
+)
+def test_parquet_store_serves_nullable_snapshot(spark, tmp_path, infer_nested, payloads):
+    """A ParquetStore topic whose data breaks the frozen schema's non-null
+    flags is served by plain and shard DoGets alike, with the types
+    Spark's parquet read of the store serves (all nullable)."""
+    engine = StreamEngine(
+        spark, EngineConfig(infer_nested=infer_nested), store_base=str(tmp_path / "store")
+    )
+    engine.register_stream("t", [json.dumps(p) for p in payloads])
+    write_envelope_file(
+        str(tmp_path / "in"),
+        [
+            {"key": f"k{i}", "value": json.dumps(p), "timestamp": "2026-08-13T10:00:00Z",
+             "offset": i, "partition": 0}
+            for i, p in enumerate(payloads)
+        ],
+    )
+    engine.append_batch("t", read_envelope_batch(spark, str(tmp_path / "in")))
+    expected = engine.fetch("t", -1).toArrow()
+    server = serve_in_thread(engine, shards=2)
+    location = f"grpc://localhost:{server.port}"
+    try:
+        client = flight.connect(location)
+        plain = client.do_get(flight.Ticket(b"t")).read_all()
+        assert plain.equals(expected)
+        sharded = read_topic(location, "t")  # one JSON ticket per shard
+        assert sharded.schema == expected.schema
+        assert sorted(sharded.column("kafka_offset").to_pylist()) == list(range(12))
+    finally:
+        server.shutdown()
+        engine.stop()
 
 
 def test_snapshot_cache_prunes_dead_topics(spark):

@@ -174,7 +174,6 @@ def test_fetch_limit_and_not_found(spark, tmp_path):
     assert engine.fetch("f1", limit=5).count() == 5
     with pytest.raises(KeyError):
         engine.fetch("nope")  # NotFound; no create-on-read (§2.3.7)
-    assert engine.health() == "OK"
     desc = engine.describe_stream("f1")
     assert desc["total_records"] == -1 and desc["batches"] >= 1
 

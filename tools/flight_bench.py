@@ -24,15 +24,13 @@ def main() -> None:
     shards = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    from roar_spark.session import get_spark
+
+    # local[$SPARK_GRAFT_CPUS], driver memory sized to the host
+    spark = get_spark(
+        app_name="flight_bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
