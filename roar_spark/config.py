@@ -7,17 +7,23 @@ stream/manager.go:82-114):
 |-------------------------------|---------------------|---------|
 | --brokers localhost:9092      | brokers             | same    |
 | --topics (csv)                | topics              | ()      |
-| --batch-size 1024             | batch_size          | 1024    |
+| --batch-size 1024 (RecordBatch rows) | batch_size   | 1024    |
 | --ttl 60s                     | ttl_seconds         | 60      |
 | --buffer-limit 100MB          | buffer_limit_bytes  | 100 MiB |
 | flush timer 5s (consumer.go:319) | flush_interval_seconds | 5  |
 | group id "roar-consumer" (consumer.go:226) | group_id | same  |
 | fetch 1KB/10MB (consumer.go:229-230) | fetch_min/max_bytes | same |
 
+``batch_size`` is the row bound of the RecordBatches a topic's store keeps,
+evicts and serves (the reference's Stream.AddBatch unit), not a cap on
+what one trigger admits.
+
 Knobs that exist in the reference but are subsumed by Spark's scheduler
 (SURVEY.md §2 A3/A17: message channel 100k, 10 workers, append semaphore
 100, batch queue 1000) are intentionally absent — micro-batch planning and
-pull-based backpressure replace them.
+pull-based backpressure replace them. The 100k channel survives as the
+fixed per-trigger admission bound (sources/kafka.py,
+``MAX_OFFSETS_PER_TRIGGER``).
 """
 
 from __future__ import annotations

@@ -100,8 +100,10 @@ REGISTRY = MetricsRegistry()
 
 class EngineMetricsListener(StreamingQueryListener):
     """Feeds ingest-side families from micro-batch progress events —
-    numInputRows → messages_total, batchDuration → processing latency,
-    one batches_created per progress (SURVEY.md §2 A21/A34/A35)."""
+    numInputRows → messages_total, batchDuration → processing latency
+    (SURVEY.md §2 A21/A34/A35). RecordBatches are counted by the engine
+    where the store splits them (StreamEngine._apply_append), so batch
+    appends count too."""
 
     def __init__(self, registry: MetricsRegistry | None = None) -> None:
         self._reg = registry or REGISTRY
@@ -115,7 +117,6 @@ class EngineMetricsListener(StreamingQueryListener):
         rows = p.numInputRows or 0
         if rows:
             self._reg.inc("roar_kafka_messages_total", rows, topic=topic)
-            self._reg.inc("roar_record_batches_created_total", 1, topic=topic)
             self._reg.inc("roar_stream_records_processed_total", rows, topic=topic)
         duration = (p.batchDuration or 0) / 1000.0
         self._reg.set("roar_processing_latency_seconds", duration, topic=topic)

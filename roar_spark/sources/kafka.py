@@ -8,9 +8,14 @@ Option mapping from the reference's reader config (SURVEY.md §2 A1-A4):
   ← ``startingOffsets=latest``
 - fetch window 1 KB – 10 MB (kafka/consumer.go:229-230)
   ← ``kafka.fetch.min.bytes`` / ``kafka.fetch.max.bytes``
-- count trigger ``batchSize`` (consumer.go:385-387) ← ``maxOffsetsPerTrigger``
-  (micro-batch row bound); the 5 s flush timer (consumer.go:319) becomes the
+- in-flight bound: the 100,000-message channel (consumer.go:105) ←
+  ``maxOffsetsPerTrigger`` (``MAX_OFFSETS_PER_TRIGGER``), so one trigger
+  admits every record that arrived since the last, as the reference's
+  consumer does; the 5 s flush timer (consumer.go:319) becomes the
   processing-time trigger set by the stream manager at start().
+- ``batchSize`` (consumer.go:385-387) is NOT an admission cap: the store
+  splits each micro-batch into RecordBatches of at most ``batch_size`` rows
+  (streaming/manager.py), the unit roar's Stream.AddBatch keeps and evicts.
 
 The Kafka source already emits exactly the envelope the reference reads
 per message (kafka/consumer.go:672-675): key, value, timestamp, offset,
@@ -35,6 +40,10 @@ from roar_spark.config import EngineConfig
 
 ENVELOPE_COLS = ["key", "value", "timestamp", "offset", "partition"]
 
+# The reference's message-channel capacity (kafka/consumer.go:105), its only
+# bound on records in flight; a trigger admits at most this many.
+MAX_OFFSETS_PER_TRIGGER = 100_000
+
 
 def kafka_reader_options(
     config: EngineConfig, topics: tuple[str, ...] | None = None
@@ -45,8 +54,9 @@ def kafka_reader_options(
     reference's reader settings (kafka/consumer.go:224-261) is pinned by an
     offline test even though this environment has no broker or connector
     jar: latest starting offsets (StartOffset: LastOffset, consumer.go:231),
-    1 KB / 10 MB fetch window (consumer.go:229-230), and the count trigger
-    as maxOffsetsPerTrigger (consumer.go:385-387).
+    1 KB / 10 MB fetch window (consumer.go:229-230), and the 100,000-message
+    channel as maxOffsetsPerTrigger (consumer.go:105). ``batch_size`` does
+    not appear here: it bounds the store's RecordBatches, not admission.
 
     GROUP-ID DIVERGENCE (documented): the reference runs every topic's
     reader under ONE group id (consumer.go:226) — fine for kafka-go's
@@ -65,7 +75,7 @@ def kafka_reader_options(
         "kafka.group.id": f"{config.group_id}-{'-'.join(topics)}",
         "kafka.fetch.min.bytes": str(config.fetch_min_bytes),
         "kafka.fetch.max.bytes": str(config.fetch_max_bytes),
-        "maxOffsetsPerTrigger": str(config.batch_size),
+        "maxOffsetsPerTrigger": str(MAX_OFFSETS_PER_TRIGGER),
     }
 
 

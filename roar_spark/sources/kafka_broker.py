@@ -51,6 +51,23 @@ class _TopicLog:
             )
         return base
 
+    def read(self, partition: int, offset: int, max_bytes: int) -> list[KafkaRecord]:
+        """Records from ``offset`` on, up to about ``max_bytes``. At least
+        one record is returned even if it alone exceeds the cap, like real
+        brokers. Walks by index: the work is bounded by the cap, not by the
+        backlog behind ``offset``."""
+        log = self.partitions[partition]
+        chunk: list[KafkaRecord] = []
+        size = 0
+        for i in range(offset, len(log)):
+            rec = log[i]
+            rec_size = len(rec.key or b"") + len(rec.value or b"") + 64
+            if chunk and size + rec_size > max_bytes:
+                break
+            chunk.append(rec)
+            size += rec_size
+        return chunk
+
 
 class KafkaBroker:
     """Threaded single-node broker bound to 127.0.0.1:<port> (0 = ephemeral).
@@ -289,11 +306,9 @@ class KafkaBroker:
                 rr.array(lambda rr2: (rr2.i32(), rr2.i64(), rr2.i32())),
             )
         )
-        out = []
         deadline = time.monotonic() + max_wait_ms / 1000.0
         while True:
-            out = []
-            total_bytes = 0
+            picked = []
             with self._lock:
                 for name, parts in topics or []:
                     log = self._topics.get(name or "")
@@ -301,34 +316,26 @@ class KafkaBroker:
                     for part, fetch_offset, partition_max_bytes in parts or []:
                         if log is None or part >= len(log.partitions):
                             presp.append(
-                                (part, kw.ERR_UNKNOWN_TOPIC_OR_PARTITION, -1, None)
+                                (part, kw.ERR_UNKNOWN_TOPIC_OR_PARTITION, -1, [])
                             )
                             continue
-                        plog = log.partitions[part]
-                        hwm = len(plog)
+                        hwm = len(log.partitions[part])
                         if fetch_offset > hwm or fetch_offset < 0:
-                            presp.append(
-                                (part, kw.ERR_OFFSET_OUT_OF_RANGE, hwm, None)
-                            )
+                            presp.append((part, kw.ERR_OFFSET_OUT_OF_RANGE, hwm, []))
                             continue
-                        chunk: list[KafkaRecord] = []
-                        size = 0
-                        for rec in plog[fetch_offset:]:
-                            # at-least-one-record rule: a batch may exceed
-                            # the cap if it is the first, like real brokers
-                            rec_size = (
-                                len(rec.key or b"") + len(rec.value or b"") + 64
-                            )
-                            if chunk and size + rec_size > partition_max_bytes:
-                                break
-                            chunk.append(rec)
-                            size += rec_size
-                        record_set = (
-                            kw.encode_record_batch(chunk) if chunk else b""
-                        )
-                        total_bytes += len(record_set)
-                        presp.append((part, kw.ERR_NONE, hwm, record_set))
-                    out.append((name, presp))
+                        chunk = log.read(part, fetch_offset, partition_max_bytes)
+                        presp.append((part, kw.ERR_NONE, hwm, chunk))
+                    picked.append((name, presp))
+            # encode with the lock released: records are immutable and the
+            # logs only grow, so produce calls need not wait on a 1 MB encode
+            out = [
+                (name, [
+                    (part, err, hwm, kw.encode_record_batch(chunk) if chunk else b"")
+                    for part, err, hwm, chunk in presp
+                ])
+                for name, presp in picked
+            ]
+            total_bytes = sum(len(p[3]) for _, presp in out for p in presp)
             # honor min_bytes/max_wait: short-poll until data or deadline
             if total_bytes >= min_bytes or time.monotonic() >= deadline:
                 break
@@ -344,7 +351,7 @@ class KafkaBroker:
                     .i64(p[2])  # high watermark
                     .i64(p[2])  # last stable offset
                     .i32(0)  # aborted transactions: none
-                    .nullable_bytes(p[3] if p[3] else b"")
+                    .nullable_bytes(p[3])
                 ),
             ),
         )

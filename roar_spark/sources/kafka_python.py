@@ -19,6 +19,9 @@ Execution model, Spark-first:
   slice — reads scale with Kafka partitions, no driver data path;
 - ``maxOffsetsPerTrigger`` caps each batch's total advance, distributed
   proportionally to per-partition lag (the JVM source's rate-limit rule).
+  The engine's option map sets it to the reference's 100,000-message
+  channel (kafka.MAX_OFFSETS_PER_TRIGGER), not to ``batch_size``, so a
+  serve trigger admits every record that arrived since the last one.
   One documented divergence from the JVM source: the Python API exposes no
   ``reportLatestOffset`` beside the admission-controlled ``latestOffset``,
   so under a cap ``processAllAvailable()``/``Trigger.AvailableNow`` judge

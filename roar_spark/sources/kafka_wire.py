@@ -21,20 +21,25 @@ public format specification. Compression codecs are intentionally
 unsupported (attributes bits 0-2 must be 0): the in-process broker
 (kafka_broker.py) and this client always speak uncompressed batches.
 
-Everything is stdlib-only; CRC32C (Castagnoli) is table-driven below
-because zlib.crc32 is the wrong polynomial.
+Everything is stdlib plus numpy. CRC32C (Castagnoli) is computed here
+because zlib.crc32 is the wrong polynomial: table-driven byte by byte for
+short inputs, and over 64-byte lanes in lockstep with numpy, folded with
+zero-shift tables, for long ones (a 1 MB fetch response).
 """
 
 from __future__ import annotations
 
+import functools
 import io
 import socket
 import struct
 import threading
 from dataclasses import dataclass, field
 
+import numpy as np
+
 # ---------------------------------------------------------------------------
-# CRC32C (Castagnoli, reflected poly 0x82F63B78) — table-driven
+# CRC32C (Castagnoli, reflected poly 0x82F63B78)
 # ---------------------------------------------------------------------------
 
 
@@ -49,14 +54,95 @@ def _make_crc32c_table() -> list[int]:
 
 
 _CRC32C_TABLE = _make_crc32c_table()
+_CRC32C_TABLE_NP = np.array(_CRC32C_TABLE, dtype=np.uint32)
+
+# The vectorized path cuts the input into lanes of _CRC_LANE bytes and
+# advances every lane one byte per numpy step, so its cost is ~_CRC_LANE
+# fixed steps plus work proportional to the length. Below the crossover the
+# byte loop is cheaper (SCALE.md, "CRC32C crossover").
+_CRC_LANE = 64
+_CRC_VECTOR_MIN_BYTES = 4096
 
 
-def crc32c(data: bytes) -> int:
-    crc = 0xFFFFFFFF
+def _crc32c_update(crc: int, data) -> int:
+    """Advance the raw CRC register over ``data``, one table step a byte."""
     tab = _CRC32C_TABLE
     for b in data:
         crc = tab[(crc ^ b) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+    return crc
+
+
+def crc32c_scalar(data: bytes) -> int:
+    """Byte-at-a-time CRC32C: the definition the vectorized path must equal."""
+    return _crc32c_update(0xFFFFFFFF, data) ^ 0xFFFFFFFF
+
+
+def _zero_shift(register: np.ndarray, tables: np.ndarray) -> np.ndarray:
+    """Apply a zero-shift operator (as four byte tables) to CRC registers."""
+    return (
+        tables[0][register & 0xFF]
+        ^ tables[1][(register >> 8) & 0xFF]
+        ^ tables[2][(register >> 16) & 0xFF]
+        ^ tables[3][register >> 24]
+    )
+
+
+@functools.cache
+def _zero_shift_tables(level: int) -> np.ndarray:
+    """Byte tables of the GF(2)-linear map "advance the register over
+    ``_CRC_LANE * 2**level`` zero bytes". The map is fixed by its image of
+    the 32 one-bit registers; level n+1 is level n applied twice."""
+    if level == 0:
+        basis = np.array(
+            [_crc32c_update(1 << i, bytes(_CRC_LANE)) for i in range(32)],
+            dtype=np.uint32,
+        )
+    else:
+        half = _zero_shift_tables(level - 1)
+        one_bits = np.left_shift(np.uint32(1), np.arange(32, dtype=np.uint32))
+        basis = _zero_shift(_zero_shift(one_bits, half), half)
+    byte = np.arange(256, dtype=np.uint32)
+    tables = np.zeros((4, 256), dtype=np.uint32)
+    for k in range(4):
+        for bit in range(8):
+            tables[k] ^= np.where((byte >> bit) & 1, basis[8 * k + bit], np.uint32(0))
+    return tables
+
+
+def _crc32c_lanes(data: bytes) -> int:
+    """CRC32C with numpy. Every lane runs the byte loop in lockstep, the
+    first from the standard initial register and the rest from zero; then
+    adjacent lanes fold pairwise, since crc(a + b) is crc(a) shifted over
+    len(b) zero bytes XOR crc(b) started from zero. A zero lane prepended
+    to an odd count stands for leading zero bytes, which leave a zero
+    register unchanged. The bytes past the last whole lane finish on the
+    byte loop."""
+    lanes = len(data) // _CRC_LANE
+    columns = (
+        np.frombuffer(data, dtype=np.uint8, count=lanes * _CRC_LANE)
+        .reshape(lanes, _CRC_LANE)
+        .T.copy()
+    )
+    register = np.zeros(lanes, dtype=np.uint32)
+    register[0] = 0xFFFFFFFF
+    tab = _CRC32C_TABLE_NP
+    for column in columns:
+        register = tab[(register ^ column) & 0xFF] ^ (register >> 8)
+    level = 0
+    while len(register) > 1:
+        if len(register) & 1:
+            register = np.concatenate([np.zeros(1, dtype=np.uint32), register])
+        register = _zero_shift(register[0::2], _zero_shift_tables(level)) ^ register[1::2]
+        level += 1
+    tail = memoryview(data)[lanes * _CRC_LANE :]
+    return _crc32c_update(int(register[0]), tail) ^ 0xFFFFFFFF
+
+
+def crc32c(data: bytes) -> int:
+    """CRC32C of ``data``, by whichever path is cheaper at its length."""
+    if len(data) < _CRC_VECTOR_MIN_BYTES:
+        return crc32c_scalar(data)
+    return _crc32c_lanes(data)
 
 
 # ---------------------------------------------------------------------------

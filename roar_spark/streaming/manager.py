@@ -8,7 +8,10 @@ Semantics matched (SURVEY.md §1.4, §2 A15-A28):
   stream/manager.go:217-241; we deliberately do NOT create on read —
   divergence §2.3.7, the reference's probe-created empty streams are a bug)
 - byte-capped buffer with DROP-OLDEST whole-batch eviction
-  (Stream.AddBatch, stream/manager.go:286-310) — drops, never spills
+  (Stream.AddBatch, stream/manager.go:286-310) — drops, never spills.
+  ``batch_size`` bounds the rows of a RecordBatch, the unit the reference
+  appends, evicts and counts (its flush every batchSize messages,
+  kafka/consumer.go:385-387); one micro-batch can hold many.
 - TTL: janitor every ttl/2 deletes streams idle > ttl
   (stream/manager.go:117-184); READS REFRESH THE TTL (GetBatches bumps
   LastUpdated, stream/manager.go:376-386 — §2.3.4, replicated on purpose:
@@ -29,16 +32,18 @@ Semantics matched (SURVEY.md §1.4, §2 A15-A28):
 Retention store design (engine-specific custom code — the one part of the
 reference Catalyst can't subsume, SURVEY.md §4):
 
-- ``MemoryStore``: Arrow tables in a driver-side deque — the reference's
-  exact single-node model (its Stream.Batches slice). Byte accounting uses
-  REAL Arrow buffer sizes, not the reference's rows×cols×8 estimate
-  (improvement noted §2.3.8).
-- ``ParquetStore``: batch-id-keyed parquet directories; eviction = delete
-  oldest directory, sizes from file metadata. This is the 100 TB path: the
-  buffer lives in the object store, executors write micro-batches directly
-  (no driver collect), serving is a parquet scan of live batch dirs, and
-  eviction is an O(1) metadata delete per batch. The drop-oldest policy and
-  TTL semantics are identical across both stores.
+- ``MemoryStore``: Arrow RecordBatches of at most ``batch_size`` rows in a
+  driver-side deque — the reference's exact single-node model (its
+  Stream.Batches slice). Byte accounting uses REAL Arrow buffer sizes, not
+  the reference's rows×cols×8 estimate (improvement noted §2.3.8).
+- ``ParquetStore``: batch-id-keyed parquet directories, one per
+  micro-batch; eviction = delete oldest directory, sizes from file
+  metadata. It serves and counts RecordBatches of at most ``batch_size``
+  rows, but evicts a micro-batch's directory whole. This is the 100 TB
+  path: the buffer lives in the object store, executors write
+  micro-batches directly (no driver collect), serving is a parquet scan of
+  live batch dirs, and eviction is an O(1) metadata delete per batch. The
+  drop-oldest policy and TTL semantics are identical across both stores.
 
 Clock injection (``time_fn``) keeps TTL behavior unit-testable.
 """
@@ -71,14 +76,18 @@ class StoreClosedError(RuntimeError):
 
 class MemoryStore:
     """Driver-side Arrow buffer with drop-oldest byte cap (reference
-    parity model; single-node by definition, like the reference)."""
+    parity model; single-node by definition, like the reference). Each
+    micro-batch is split into RecordBatches of at most ``batch_size`` rows,
+    which are kept, evicted and counted one by one (Stream.AddBatch)."""
 
-    def __init__(self, schema: T.StructType, max_bytes: int) -> None:
+    def __init__(self, schema: T.StructType, max_bytes: int, *, batch_size: int) -> None:
         self._schema = schema
         self._max_bytes = max_bytes
-        self._batches: deque = deque()  # (arrow_table, nbytes)
+        self._batch_size = batch_size
+        self._batches: deque = deque()  # (record_batch, nbytes)
         self._bytes = 0
         self.records_dropped = 0
+        self.batches_created = 0
         self._closed = False
         self._lock = threading.Lock()
         # monotone mutation counter (append/evict/close): lets the Flight
@@ -96,22 +105,27 @@ class MemoryStore:
         table = batch_df.toArrow()
         if table.num_rows == 0:
             return 0
-        size = table.nbytes
+        # one chunk first, so the split is exactly ceil(rows / batch_size)
+        # batches however Spark chunked the collect; slices share buffers
+        batches = table.combine_chunks().to_batches(max_chunksize=self._batch_size)
         with self._lock:
             if self._closed:
                 raise StoreClosedError("MemoryStore closed (TTL expiry)")
-            # eviction loop parity: stream/manager.go:288-310
-            while self._batches and self._bytes + size > self._max_bytes:
-                old, old_size = self._batches.popleft()
-                self._bytes -= old_size
-                self.records_dropped += old.num_rows
-                self.evict_epoch += 1
-            # reference parity (Stream.AddBatch, stream/manager.go:286-345):
-            # the NEW batch is always appended, even when it alone exceeds
-            # the cap — the buffer runs over-cap until the next append
-            # evicts it. Never silently discard the newest data.
-            self._batches.append((table, size))
-            self._bytes += size
+            for batch in batches:
+                size = batch.nbytes
+                # eviction loop parity: stream/manager.go:288-310
+                while self._batches and self._bytes + size > self._max_bytes:
+                    old, old_size = self._batches.popleft()
+                    self._bytes -= old_size
+                    self.records_dropped += old.num_rows
+                    self.evict_epoch += 1
+                # reference parity (Stream.AddBatch, stream/manager.go:286-345):
+                # the NEW batch is always appended, even when it alone exceeds
+                # the cap — the buffer runs over-cap until the next batch
+                # evicts it. Never silently discard the newest data.
+                self._batches.append((batch, size))
+                self._bytes += size
+            self.batches_created += len(batches)
             self.version += 1
         return table.num_rows
 
@@ -124,17 +138,17 @@ class MemoryStore:
     def snapshot_arrow(self) -> "object":
         """Snapshot as an Arrow table WITHOUT a Spark round-trip — what
         every Flight DoGet serves (one materialization per store version,
-        shared by all readers). Zero-copy: the buffered tables are
+        shared by all readers). Zero-copy: the buffered RecordBatches are
         already Arrow."""
         import pyarrow as pa
 
         with self._lock:
-            tables = [t for t, _ in self._batches]
-        if not tables:
+            batches = [b for b, _ in self._batches]
+        if not batches:
             from pyspark.sql.pandas.types import to_arrow_schema
 
             return to_arrow_schema(self._schema).empty_table()
-        return pa.concat_tables(tables)
+        return pa.Table.from_batches(batches)
 
     @property
     def current_bytes(self) -> int:
@@ -159,14 +173,19 @@ class MemoryStore:
 
 class ParquetStore:
     """Batch-directory parquet buffer — the distributed retention path.
-    Executors write micro-batches straight to storage; the driver tracks
-    only (batch_id, nbytes) metadata."""
+    Executors write micro-batches straight to storage, one directory per
+    micro-batch; the driver tracks only (batch_id, nbytes) metadata.
+    Eviction drops a whole directory, however many ``batch_size``-row
+    RecordBatches it serves as."""
 
-    def __init__(self, schema: T.StructType, max_bytes: int, base: str) -> None:
+    def __init__(
+        self, schema: T.StructType, max_bytes: int, base: str, *, batch_size: int
+    ) -> None:
         import uuid
 
         self._schema = schema
         self._max_bytes = max_bytes
+        self._batch_size = batch_size
         self._base = base
         # every store INCARNATION owns a unique generation dir under the
         # topic base: after a TTL expiry, the janitor's pending close of
@@ -180,6 +199,7 @@ class ParquetStore:
         self._bytes = 0
         self._next_id = 0
         self.records_dropped = 0
+        self.batches_created = 0
         self._closed = False
         self._lock = threading.Lock()
         # monotone mutation counter — see MemoryStore.version
@@ -247,6 +267,7 @@ class ParquetStore:
             # always append the new batch (reference parity — see MemoryStore)
             self._batches.append((path, size, rows))
             self._bytes += size
+            self.batches_created += -(-rows // self._batch_size)  # as served
             self.version += 1
         for old_path in doomed_now:
             shutil.rmtree(old_path, ignore_errors=True)
@@ -267,8 +288,9 @@ class ParquetStore:
         read of them does: the data need not keep the frozen non-null
         flags (a field missing from a message parses to NULL; nested
         children are written nullable). An empty buffer serves the
-        frozen schema, like the empty snapshot(). Single-process read by
-        design: the facade is a single-node serving veneer; the
+        frozen schema, like the empty snapshot(). Each directory is served
+        as RecordBatches of at most ``batch_size`` rows. Single-process
+        read by design: the facade is a single-node serving veneer; the
         cluster-scale read of this store is the snapshot() parquet scan."""
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -280,7 +302,17 @@ class ParquetStore:
         if not paths:
             return to_arrow_schema(self._schema).empty_table()
         target = to_arrow_schema(self._schema._as_nullable())
-        return pa.concat_tables([pq.read_table(p).cast(target) for p in paths])
+        return pa.Table.from_batches(
+            [
+                batch
+                for p in paths
+                for batch in pq.read_table(p)
+                .cast(target)
+                .combine_chunks()
+                .to_batches(max_chunksize=self._batch_size)
+            ],
+            schema=target,
+        )
 
     @property
     def current_bytes(self) -> int:
@@ -379,9 +411,14 @@ class StreamEngine:
     def _make_store(self, topic: str, schema: T.StructType):
         if self._store_base:
             return ParquetStore(
-                schema, self.config.buffer_limit_bytes, os.path.join(self._store_base, topic)
+                schema,
+                self.config.buffer_limit_bytes,
+                os.path.join(self._store_base, topic),
+                batch_size=self.config.batch_size,
             )
-        return MemoryStore(schema, self.config.buffer_limit_bytes)
+        return MemoryStore(
+            schema, self.config.buffer_limit_bytes, batch_size=self.config.batch_size
+        )
 
     def register_converter(self, topic: str, converter, schema: T.StructType) -> None:
         """Per-topic custom converter hook — parity with the reference's
@@ -448,13 +485,17 @@ class StreamEngine:
 
     def _apply_append(self, topic: str, handle: StreamHandle, parsed_batch: DataFrame) -> int:
         """Shared append bookkeeping (streaming + batch paths): one store
-        materialization, records_total / last_updated / drop-metric all
-        maintained in one place."""
-        dropped_before = handle.store.records_dropped
-        n = handle.store.append(parsed_batch)
-        dropped = handle.store.records_dropped - dropped_before
+        materialization, records_total / last_updated / drop and
+        RecordBatch metrics all maintained in one place."""
+        store = handle.store
+        dropped_before, created_before = store.records_dropped, store.batches_created
+        n = store.append(parsed_batch)
+        dropped = store.records_dropped - dropped_before
         if dropped:
             REGISTRY.inc("roar_stream_records_dropped_total", dropped, topic=topic)
+        created = store.batches_created - created_before
+        if created:
+            REGISTRY.inc("roar_record_batches_created_total", created, topic=topic)
         if n:
             handle.records_total += n
             handle.last_updated = self._time()

@@ -100,6 +100,42 @@ def test_plain_doget_serves_append_order_on_parquet_store(served_engine, spark, 
         assert table.column("kafka_offset").to_pylist() == list(range(rows))
 
 
+@pytest.mark.parametrize("store", ["memory", "parquet"])
+def test_plain_doget_streams_batch_size_record_batches(spark, tmp_path, store):
+    """Every RecordBatch a plain DoGet streams holds at most batch_size
+    rows: one 2,500-row micro-batch arrives as 1,024 + 1,024 + 452."""
+    engine = StreamEngine(
+        spark,
+        EngineConfig(batch_size=1024),
+        store_base=str(tmp_path / "store") if store == "parquet" else None,
+    )
+    engine.register_stream("wide", [json.dumps({"n": 1})])
+    path = str(tmp_path / "wide")
+    write_envelope_file(
+        path,
+        [
+            {
+                "key": f"k{i}",
+                "value": json.dumps({"n": i}),
+                "timestamp": "2026-08-13T10:00:00Z",
+                "offset": i,
+                "partition": 0,
+            }
+            for i in range(2500)
+        ],
+    )
+    engine.append_batch("wide", read_envelope_batch(spark, path))
+    server = serve_in_thread(engine)
+    try:
+        reader = flight.connect(f"grpc://localhost:{server.port}").do_get(
+            flight.Ticket(b"wide")
+        )
+        assert [chunk.data.num_rows for chunk in reader] == [1024, 1024, 452]
+    finally:
+        server.shutdown()
+        engine.stop()
+
+
 def test_plain_doget_runs_no_spark_job(served_engine, spark):
     """A plain DoGet on a MemoryStore topic is served without a Spark job:
     the status tracker records no job for the reading thread's group."""

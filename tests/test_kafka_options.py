@@ -6,9 +6,9 @@ exactly the reference reader's settings (kafka/consumer.go:224-261) —
 per-query group id (reference prefix + topic suffix — Spark requires
 uniqueness per query), latest starting offsets, 1 KB / 10 MB fetch
 window — and
-the count trigger from the engine config. This moves A1 from "documented"
-to "pinned-by-test": a cluster run only adds the connector jar, not new
-code paths.
+the admission bound of the reference's message channel. This moves A1
+from "documented" to "pinned-by-test": a cluster run only adds the
+connector jar, not new code paths.
 """
 
 from __future__ import annotations
@@ -34,8 +34,9 @@ def test_option_map_matches_reference_reader_config():
         # MinBytes 1e3 / MaxBytes 10e6 (kafka/consumer.go:229-230)
         "kafka.fetch.min.bytes": "1000",
         "kafka.fetch.max.bytes": "10000000",
-        # --batch-size count trigger (kafka/consumer.go:385-387)
-        "maxOffsetsPerTrigger": "1024",
+        # admission bound: the 100,000-message channel (kafka/consumer.go:105);
+        # --batch-size (consumer.go:385-387) bounds RecordBatches, not this
+        "maxOffsetsPerTrigger": "100000",
     }
 
 

@@ -60,6 +60,35 @@ def _records(n, *, partition_key=True, start=0):
 def test_crc32c_standard_vector():
     assert kw.crc32c(b"123456789") == 0xE3069283
     assert kw.crc32c(b"") == 0
+    assert kw.crc32c_scalar(b"123456789") == 0xE3069283
+
+
+_CROSS = kw._CRC_VECTOR_MIN_BYTES
+_LANE = kw._CRC_LANE
+
+
+@pytest.mark.parametrize(
+    "n",
+    [
+        0, 1, _LANE - 1, _LANE, _LANE + 1,  # lane boundary
+        2 * _LANE, 3 * _LANE, 3 * _LANE + 5, 7 * _LANE - 1,  # odd lane counts fold
+        _CROSS - 1, _CROSS, _CROSS + 1,  # scalar/vector crossover
+        _CROSS + _LANE - 1, (1 << 20) + 3,  # 1 MB fetch response + a tail
+    ],
+)
+def test_crc32c_matches_scalar_reference(n):
+    data = bytes((i * 131 + n) & 0xFF for i in range(n))
+    want = kw.crc32c_scalar(data)
+    assert kw.crc32c(data) == want
+    if n >= _LANE:  # the lane path itself, below the crossover too
+        assert kw._crc32c_lanes(data) == want
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.binary(min_size=_LANE, max_size=3 * _CROSS))
+def test_crc32c_lanes_property(data):
+    assert kw._crc32c_lanes(data) == kw.crc32c_scalar(data)
+    assert kw.crc32c(data) == kw.crc32c_scalar(data)
 
 
 def test_record_batch_roundtrip_with_headers_and_nulls():
@@ -199,7 +228,10 @@ def test_options_parse_accepts_jvm_source_option_map():
     assert opts.bootstrap == "127.0.0.1:9"
     assert opts.topics == ("a", "b")
     assert opts.starting_offsets == "earliest"
-    assert opts.max_offsets_per_trigger == 77
+    # admission bound = the reference's 100,000-message channel
+    # (kafka/consumer.go:105), not batch_size: batchSize (consumer.go:385-387)
+    # bounds the store's RecordBatches
+    assert opts.max_offsets_per_trigger == 100_000
     assert (opts.fetch_min_bytes, opts.fetch_max_bytes) == (1_000, 10_000_000)
 
 
@@ -306,6 +338,35 @@ def test_spark_stream_rate_cap_and_exactly_all_rows(spark, tmp_path):
             assert sizes and max(sizes) <= 4, sizes
         finally:
             query.stop()
+
+
+def test_engine_admits_whole_backlog_in_one_micro_batch(spark, tmp_path):
+    """batch_size does not cap admission: a 3,000-record backlog is one
+    micro-batch under batch_size 1,024 (roar's only in-flight bound is its
+    100,000-message channel), and the store holds it as 3 RecordBatches."""
+    with KafkaBroker() as broker:
+        with KafkaWireClient(broker.bootstrap) as client:
+            client.produce("bl", 0, _records(1500))
+            client.produce("bl", 1, _records(1500, start=1500))
+        config = EngineConfig(
+            brokers=broker.bootstrap,
+            topics=("bl",),
+            starting_offsets="earliest",
+            batch_size=1024,
+            flush_interval_seconds=1,
+            checkpoint_path=str(tmp_path / "ckpt"),
+        )
+        engine = StreamEngine(spark, config)
+        env = kafka_python_envelope_stream(spark, config, ("bl",)).drop("topic")
+        handle = engine.ingest("bl", env, [json.dumps({"n": 0, "s": "v0"})])
+        try:
+            handle.query.processAllAvailable()
+            sizes = [p["numInputRows"] for p in handle.query.recentProgress]
+            assert [n for n in sizes if n] == [3000]
+            assert engine.fetch("bl", limit=-1).count() == 3000
+            assert handle.store.batch_count == 3
+        finally:
+            engine.stop()
 
 
 def test_spark_stream_starting_offsets_latest_skips_backlog(spark, tmp_path):

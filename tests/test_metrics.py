@@ -8,7 +8,11 @@ import json
 
 from roar_spark.config import EngineConfig
 from roar_spark.metrics import REGISTRY, MetricsRegistry, attach
-from roar_spark.sources.files import file_envelope_stream, write_envelope_file
+from roar_spark.sources.files import (
+    file_envelope_stream,
+    read_envelope_batch,
+    write_envelope_file,
+)
 from roar_spark.streaming.manager import StreamEngine
 
 
@@ -111,3 +115,29 @@ def test_streaming_metrics_flow(spark, tmp_path):
         engine.stop()
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_record_batches_created_counts_store_batches(spark, tmp_path):
+    """roar_record_batches_created_total counts the RecordBatches the store
+    created, ceil(rows / batch_size) per append, on the batch-append path
+    too: 2,500 rows at batch_size 1,024 are 3 batches."""
+    engine = StreamEngine(spark, EngineConfig(batch_size=1024))
+    engine.register_stream("rbc", [json.dumps({"n": 1})])
+    path = str(tmp_path / "rbc")
+    write_envelope_file(
+        path,
+        [
+            {
+                "key": f"k{i}",
+                "value": json.dumps({"n": i}),
+                "timestamp": "2026-08-13T10:00:00Z",
+                "offset": i,
+                "partition": 0,
+            }
+            for i in range(2500)
+        ],
+    )
+    before = REGISTRY.get("roar_record_batches_created_total", topic="rbc")
+    assert engine.append_batch("rbc", read_envelope_batch(spark, path)) == 2500
+    assert REGISTRY.get("roar_record_batches_created_total", topic="rbc") - before == 3
+    engine.stop()

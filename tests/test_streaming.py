@@ -147,6 +147,47 @@ def test_retention_oversized_batch_appended(spark, tmp_path):
     assert handle.records_total == 52
 
 
+def _append_msgs(spark, tmp_path, engine, topic, n, start_offset=0):
+    path = str(tmp_path / f"{topic}_{start_offset}")
+    write_envelope_file(path, _msgs(n, start_offset=start_offset))
+    return engine.append_batch(topic, read_envelope_batch(spark, path))
+
+
+def test_memory_store_splits_micro_batch_into_record_batches(spark, tmp_path):
+    """batch_size bounds the store's RecordBatches, not what a micro-batch
+    may hold (Stream.AddBatch): 2,500 rows at batch_size 1,024 are held as
+    3 RecordBatches and served in append order."""
+    engine = _engine_with_stream(
+        spark, tmp_path, "rb1", cap_bytes=10_000_000, batch_size=1024
+    )
+    assert _append_msgs(spark, tmp_path, engine, "rb1", 2500) == 2500
+    store = engine._handle("rb1").store
+    assert store.batch_count == 3 and store.batches_created == 3
+    table = store.snapshot_arrow()
+    assert [b.num_rows for b in table.to_batches()] == [1024, 1024, 452]
+    assert table.column("kafka_offset").to_pylist() == list(range(2500))
+
+
+def test_memory_store_evicts_whole_record_batches_oldest_first(spark, tmp_path):
+    """Under the byte cap the store drops whole RecordBatches, oldest first:
+    what survives is a suffix of the appended rows that starts on a
+    RecordBatch boundary, even inside the micro-batch being appended."""
+    probe = _engine_with_stream(spark, tmp_path, "rb2", cap_bytes=10_000_000, batch_size=100)
+    _append_msgs(spark, tmp_path, probe, "rb2", 100)
+    batch_bytes = probe._handle("rb2").store.current_bytes
+    cap = int(batch_bytes * 2.5)
+    engine = _engine_with_stream(spark, tmp_path, "rb3", cap_bytes=cap, batch_size=100)
+    _append_msgs(spark, tmp_path, engine, "rb3", 250)  # batches 100, 100, 50
+    _append_msgs(spark, tmp_path, engine, "rb3", 250, start_offset=250)
+    store = engine._handle("rb3").store
+    offsets = store.snapshot_arrow().column("kafka_offset").to_pylist()
+    assert offsets == list(range(500 - len(offsets), 500))
+    assert 500 - len(offsets) in {100, 200, 250, 350, 450}  # batch boundaries
+    assert store.records_dropped == 500 - len(offsets) > 0
+    assert store.current_bytes <= cap
+    assert all(b.num_rows <= 100 for b in store.snapshot_arrow().to_batches())
+
+
 def test_ttl_expiry_and_read_refresh(spark, tmp_path):
     clock = [0.0]
     engine = StreamEngine(
