@@ -16,19 +16,28 @@ set).
 
 from __future__ import annotations
 
+import bisect
 import threading
 from collections import defaultdict
 
 from pyspark.sql.streaming import StreamingQueryListener
 
 
+# Upper bounds (seconds) of every histogram's buckets: 50 ms to twice the
+# 5 s serve trigger, so a micro-batch's duration lands in a finite bucket
+LATENCY_BUCKETS = (0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0)
+
+
 class MetricsRegistry:
-    """Thread-safe labeled counters/gauges + Prometheus text exposition."""
+    """Thread-safe labeled counters/gauges/histograms + Prometheus text
+    exposition."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
         self._counters: dict[tuple[str, tuple], float] = defaultdict(float)
         self._gauges: dict[tuple[str, tuple], float] = {}
+        # key -> [per-bucket counts (last slot: above every bound), sum]
+        self._histograms: dict[tuple[str, tuple], list] = {}
 
     @staticmethod
     def _key(name: str, labels: dict | None) -> tuple[str, tuple]:
@@ -41,6 +50,16 @@ class MetricsRegistry:
     def set(self, name: str, value: float, **labels) -> None:
         with self._lock:
             self._gauges[self._key(name, labels)] = value
+
+    def observe(self, name: str, value: float, **labels) -> None:
+        """Record one sample in histogram ``name`` (LATENCY_BUCKETS)."""
+        key = self._key(name, labels)
+        with self._lock:
+            hist = self._histograms.get(key)
+            if hist is None:
+                hist = self._histograms[key] = [[0] * (len(LATENCY_BUCKETS) + 1), 0.0]
+            hist[0][bisect.bisect_left(LATENCY_BUCKETS, value)] += 1
+            hist[1] += value
 
     def get(self, name: str, **labels) -> float:
         key = self._key(name, labels)
@@ -57,27 +76,36 @@ class MetricsRegistry:
         with self._lock:
             series = [("counter", k, v) for k, v in sorted(self._counters.items())]
             series += [("gauge", k, v) for k, v in sorted(self._gauges.items())]
+            series += [
+                ("histogram", k, (list(counts), total))
+                for k, (counts, total) in sorted(self._histograms.items())
+            ]
         seen_types = set()
         for kind, (name, labels), value in series:
             if name not in seen_types:
                 lines.append(f"# TYPE {name} {kind}")
                 seen_types.add(name)
-            label_str = (
-                "{" + ",".join(f'{k}="{_esc(v)}"' for k, v in labels) + "}"
-                if labels
-                else ""
-            )
-            lines.append(f"{name}{label_str} {value}")
+            if kind != "histogram":
+                lines.append(f"{name}{_labels(labels)} {value}")
+                continue
+            counts, total = value
+            cumulative = 0
+            for bound, n in zip((*map(str, LATENCY_BUCKETS), "+Inf"), counts):
+                cumulative += n
+                lines.append(f"{name}_bucket{_labels((*labels, ('le', bound)))} {cumulative}")
+            lines.append(f"{name}_sum{_labels(labels)} {total}")
+            lines.append(f"{name}_count{_labels(labels)} {cumulative}")
         return "\n".join(lines) + "\n"
 
     def remove(self, name: str, **labels) -> None:
-        """Drop one series (both kinds) — for per-topic gauges whose topic
+        """Drop one series (every kind) — for per-topic gauges whose topic
         no longer exists; without this, expired streams report phantom
         buffer bytes forever."""
         key = self._key(name, labels)
         with self._lock:
             self._gauges.pop(key, None)
             self._counters.pop(key, None)
+            self._histograms.pop(key, None)
 
     def gauge_label_values(self, names: tuple[str, ...], label: str) -> set[str]:
         """Snapshot the distinct values of one label across the named gauge
@@ -95,15 +123,21 @@ def _esc(v: object) -> str:
     return str(v).replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
 
 
+def _labels(labels: tuple) -> str:
+    if not labels:
+        return ""
+    return "{" + ",".join(f'{k}="{_esc(v)}"' for k, v in labels) + "}"
+
+
 REGISTRY = MetricsRegistry()
 
 
 class EngineMetricsListener(StreamingQueryListener):
     """Feeds ingest-side families from micro-batch progress events —
-    numInputRows → messages_total, batchDuration → processing latency
-    (SURVEY.md §2 A21/A34/A35). RecordBatches are counted by the engine
-    where the store splits them (StreamEngine._apply_append), so batch
-    appends count too."""
+    numInputRows → messages_total, batchDuration → the processing-latency
+    histogram (SURVEY.md §2 A21/A34/A35). RecordBatches are counted by the
+    engine where the store splits them (StreamEngine._apply_append), so
+    batch appends count too."""
 
     def __init__(self, registry: MetricsRegistry | None = None) -> None:
         self._reg = registry or REGISTRY
@@ -119,7 +153,7 @@ class EngineMetricsListener(StreamingQueryListener):
             self._reg.inc("roar_kafka_messages_total", rows, topic=topic)
             self._reg.inc("roar_stream_records_processed_total", rows, topic=topic)
         duration = (p.batchDuration or 0) / 1000.0
-        self._reg.set("roar_processing_latency_seconds", duration, topic=topic)
+        self._reg.observe("roar_processing_latency_seconds", duration, topic=topic)
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass

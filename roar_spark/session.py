@@ -11,6 +11,18 @@ One place to encode the execution-engine posture:
   the reference's ``timestamp[ns]`` columns (kafka/consumer.go:836).
 - ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
   real cluster AQE coalescing makes the initial number mostly a ceiling.
+- Python workers fork from our own daemon, ``roar_spark._worker_daemon``
+  (``spark.python.daemon.module``). Every Python task calls
+  ``importlib.invalidate_caches()``, which before Python 3.13 re-reads the
+  directory of pyspark.zip once per zip importer, 16 times in a worker; in
+  the gateway benchmark's micro-batches that cost 146-630 ms a task,
+  against a median of 8 ms reading a live-topic task's records. The daemon re-reads an archive only when it
+  changed, so a Kafka micro-batch (one task per partition) and every
+  pandas/Arrow kernel start in milliseconds. The package root goes on the
+  workers' PYTHONPATH so the daemon imports from any working directory.
+  Like every conf here, it applies only when ``get_spark`` creates the
+  SparkContext; on a cluster the executors must be able to import
+  roar_spark, as the registry's Python kernels already require.
 """
 
 from __future__ import annotations
@@ -42,6 +54,25 @@ def _default_driver_memory() -> str:
         gb = 8
     return f"{gb}g"
 
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
+# Python worker daemon (roar_spark/_worker_daemon.py): pyspark.daemon with an
+# import-cache invalidation that does not re-read pyspark.zip on every task
+WORKER_DAEMON_MODULE = "roar_spark._worker_daemon"
+
+
+def _prepend_worker_path(path: str) -> None:
+    """Put ``path`` first on $PYTHONPATH. The JVM inherits this process's
+    environment and PythonWorkerFactory merges env PYTHONPATH into every
+    Python worker's path, so this must run before the JVM starts."""
+    existing = os.environ.get("PYTHONPATH", "")
+    if path not in existing.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            f"{path}{os.pathsep}{existing}" if existing else path
+        )
+
+
 def _ensure_protobuf_shim() -> None:
     """Make `google.protobuf` importable when no real protobuf exists, via
     the vendored pure-Python runtime shim (roar_spark/vendor/README.md).
@@ -49,11 +80,9 @@ def _ensure_protobuf_shim() -> None:
     Spark 4's transformWithStateInPandas Python worker speaks the TWS
     state-server protocol through the generated StateMessage_pb2 module,
     whose only runtime dependency is this API. Prepending (a) sys.path for
-    this process and (b) $PYTHONPATH for the JVM's Python workers (the JVM
-    inherits our env; PythonWorkerFactory merges env PYTHONPATH into the
-    worker's path) activates the shim everywhere the protocol runs. A real
-    protobuf install always wins — we only add the path when the import
-    fails."""
+    this process and (b) $PYTHONPATH for the JVM's Python workers activates
+    the shim everywhere the protocol runs. A real protobuf install always
+    wins — we only add the path when the import fails."""
     import importlib.util
     import sys
 
@@ -64,14 +93,10 @@ def _ensure_protobuf_shim() -> None:
             return
     except ModuleNotFoundError:
         pass
-    vendor = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
+    vendor = os.path.join(_PACKAGE_DIR, "vendor")
     if vendor not in sys.path:
         sys.path.insert(0, vendor)
-    existing = os.environ.get("PYTHONPATH", "")
-    if vendor not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{vendor}{os.pathsep}{existing}" if existing else vendor
-        )
+    _prepend_worker_path(vendor)
 
 
 DEFAULT_APP_NAME = "roar_spark"
@@ -88,7 +113,11 @@ def get_spark(
     Local testing runs ``local[N]``; the same configuration is valid on a
     cluster (master comes from the environment / spark-submit there).
     """
-    _ensure_protobuf_shim()  # before the JVM spawns: workers inherit env
+    # before the JVM spawns: workers inherit env. The package root makes
+    # the worker daemon importable from any working directory — without it
+    # the workers found roar_spark only through the launching process's cwd.
+    _ensure_protobuf_shim()
+    _prepend_worker_path(os.path.dirname(_PACKAGE_DIR))
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -116,6 +145,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         # PySpark call-site capture (DataFrame debugging) costs THREE extra
         # py4j round trips per DataFrame/Column API call (conf read +
         # origin set + origin clear) plus a Python stack walk — measured

@@ -17,6 +17,10 @@ Execution model, Spark-first:
   and plans one InputPartition per (topic, partition, range) slice;
 - EXECUTORS each open their own broker connection and Fetch exactly their
   slice — reads scale with Kafka partitions, no driver data path;
+- a slice reaches Spark as one Arrow RecordBatch per Fetch response, so no
+  record passes through PySpark's per-row tuple converter (2,500 records:
+  about 7 ms against 1.2 ms to build the batch, and the converter's first
+  call in a worker imports pandas, about 0.35 s);
 - ``maxOffsetsPerTrigger`` caps each batch's total advance, distributed
   proportionally to per-partition lag (the JVM source's rate-limit rule).
   The engine's option map sets it to the reference's 100,000-message
@@ -39,9 +43,9 @@ Execution model, Spark-first:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timezone
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
@@ -50,12 +54,14 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from roar_spark.config import EngineConfig
 from roar_spark.sources.kafka import ENVELOPE_COLS, kafka_reader_options
 from roar_spark.sources.kafka_wire import (
     EARLIEST_TIMESTAMP,
     LATEST_TIMESTAMP,
+    KafkaRecord,
     KafkaWireClient,
 )
 
@@ -71,6 +77,8 @@ KAFKA_SOURCE_SCHEMA = T.StructType(
         T.StructField("timestampType", T.IntegerType(), True),
     ]
 )
+
+_ARROW_SCHEMA = to_arrow_schema(KAFKA_SOURCE_SCHEMA)
 
 _TS_CREATE_TIME = 0
 
@@ -124,10 +132,33 @@ class RangePartition(InputPartition):
         self.opts = opts
 
 
-def _read_range(part: RangePartition) -> Iterator[tuple]:
-    """Executor-side fetch loop — yields rows in KAFKA_SOURCE_SCHEMA order.
-    Runs on the executor's own connection; loops because a single Fetch is
-    bounded by partition_max_bytes, like any real consumer."""
+def _record_batch(topic: str, partition: int, records: list[KafkaRecord]) -> pa.RecordBatch:
+    """Records of one Fetch response as an Arrow batch in
+    KAFKA_SOURCE_SCHEMA order: what PySpark's row converter would build
+    from the per-record tuples (epoch-ms timestamps widen to µs exactly),
+    without its per-value Python conversions."""
+    n = len(records)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r.key for r in records], pa.binary()),
+            pa.array([r.value for r in records], pa.binary()),
+            pa.array([topic] * n, pa.string()),
+            pa.array([partition] * n, pa.int32()),
+            pa.array([r.offset for r in records], pa.int64()),
+            pa.array([r.timestamp_ms * 1000 for r in records], pa.timestamp("us", tz="UTC")),
+            pa.array([_TS_CREATE_TIME] * n, pa.int32()),
+        ],
+        schema=_ARROW_SCHEMA,
+    )
+
+
+def _read_range(part: RangePartition) -> Iterator[pa.RecordBatch]:
+    """Executor-side fetch loop: yields one Arrow RecordBatch per Fetch
+    response, holding the response's records inside [start, end). Spark 4
+    takes RecordBatches from ``read()`` as they are, so no record goes
+    through PySpark's per-row tuple converter. Runs on the executor's own
+    connection; loops because a single Fetch is bounded by
+    partition_max_bytes, like any real consumer."""
     if part.start >= part.end:
         return
     with KafkaWireClient(part.opts.bootstrap) as client:
@@ -154,20 +185,10 @@ def _read_range(part: RangePartition) -> Iterator[tuple]:
                         f"planned end {part.end} at {part.topic}/{part.partition}"
                     )
                 continue
-            for rec in result.records:
-                if rec.offset >= part.end:
-                    return
-                if rec.offset < offset:
-                    continue  # batch base below requested start
-                yield (
-                    rec.key,
-                    rec.value,
-                    part.topic,
-                    part.partition,
-                    rec.offset,
-                    datetime.fromtimestamp(rec.timestamp_ms / 1000.0, tz=timezone.utc),
-                    _TS_CREATE_TIME,
-                )
+            # a record batch's base may lie below the requested start
+            records = [r for r in result.records if offset <= r.offset < part.end]
+            if records:
+                yield _record_batch(part.topic, part.partition, records)
             offset = result.records[-1].offset + 1
 
 
@@ -301,7 +322,7 @@ class RoarKafkaStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> list[RangePartition]:
         return _plan_partitions(start, end, self._opts)
 
-    def read(self, partition: RangePartition) -> Iterator[tuple]:
+    def read(self, partition: RangePartition) -> Iterator[pa.RecordBatch]:
         return _read_range(partition)
 
     def commit(self, end: dict) -> None:
@@ -328,7 +349,7 @@ class RoarKafkaBatchReader(DataSourceReader):
             resolver.close()
         return _plan_partitions(start, end, self._opts)
 
-    def read(self, partition: RangePartition) -> Iterator[tuple]:
+    def read(self, partition: RangePartition) -> Iterator[pa.RecordBatch]:
         return _read_range(partition)
 
 

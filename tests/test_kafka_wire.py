@@ -15,7 +15,9 @@ from __future__ import annotations
 import json
 import struct
 import time
+from datetime import datetime, timezone
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -263,6 +265,66 @@ def test_plan_partitions_skips_empty_and_splits_to_min_partitions():
         for (s1, e1), (s2, e2) in zip(ranges, ranges[1:]):
             assert e1 == s2
     assert len(by_part[0]) == 5 and len(by_part[2]) == 1
+
+
+def _tuple_rows(part, pages):
+    """The per-record tuples the source's read() yielded before it handed
+    Spark Arrow batches — the parity reference."""
+    offset = part.start
+    for result in pages:
+        for rec in result.records:
+            if rec.offset >= part.end:
+                return
+            if rec.offset < offset:
+                continue
+            yield (
+                rec.key, rec.value, part.topic, part.partition, rec.offset,
+                datetime.fromtimestamp(rec.timestamp_ms / 1000.0, tz=timezone.utc), 0,
+            )
+        offset = result.records[-1].offset + 1
+
+
+def test_read_range_batches_match_tuple_rows(monkeypatch):
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    from roar_spark.sources import kafka_python as kp
+
+    def rec(offset, ts_ms, key=b"k", value=b"v"):
+        return KafkaRecord(offset=offset, timestamp_ms=ts_ms, key=key, value=value)
+
+    pages = [
+        # the first record batch's base (3) lies below the slice start (5)
+        kw.FetchResult(kw.ERR_NONE, 20, [
+            rec(3, BASE_TS), rec(4, BASE_TS + 1), rec(5, BASE_TS + 999, key=None),
+            rec(6, 0, value=None), rec(7, 1, key=None, value=None),
+        ]),
+        kw.FetchResult(kw.ERR_NONE, 20, [rec(8, BASE_TS + 123_456), rec(9, -1), rec(10, 7), rec(11, 8)]),
+    ]
+
+    class PagedClient:
+        def __init__(self, bootstrap):
+            self.pages = list(pages)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            pass
+
+        def fetch(self, topic, partition, offset, **kwargs):
+            return self.pages.pop(0)
+
+    monkeypatch.setattr(kp, "KafkaWireClient", PagedClient)
+    part = RangePartition("t", 2, 5, 11, _opts())
+    got = list(kp._read_range(part))
+    assert [b.num_rows for b in got] == [3, 3]  # one batch per Fetch response
+    want = records_to_arrow_batches(
+        _tuple_rows(part, pages), 10_000, kp.KAFKA_SOURCE_SCHEMA, kp.RoarKafkaDataSource
+    )
+    got_table = pa.Table.from_batches(got)
+    assert got_table.equals(pa.Table.from_batches(list(want)))
+    assert got_table.column("offset").to_pylist() == [5, 6, 7, 8, 9, 10]
+    assert got_table.column("key").to_pylist()[0::2] == [None, None, b"k"]
 
 
 # --- Spark source e2e -------------------------------------------------------

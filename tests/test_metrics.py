@@ -38,6 +38,32 @@ def test_exposition_format():
     assert 'roar_stream_memory_bytes{topic="t1"} 1234.0' in text
 
 
+def test_histogram_exposition():
+    reg = MetricsRegistry()
+    for seconds in (0.03, 0.05, 0.7, 3.0, 42.0):
+        reg.observe("roar_processing_latency_seconds", seconds, topic="t1")
+    reg.observe("roar_processing_latency_seconds", 0.2, topic="t2")
+    lines = reg.exposition().splitlines()
+    assert lines.count("# TYPE roar_processing_latency_seconds histogram") == 1
+    t1 = [l for l in lines if 'topic="t1"' in l]
+    assert t1 == [
+        'roar_processing_latency_seconds_bucket{topic="t1",le="0.05"} 2',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="0.1"} 2',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="0.25"} 2',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="0.5"} 2',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="1.0"} 3',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="2.5"} 3',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="5.0"} 4',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="10.0"} 4',
+        'roar_processing_latency_seconds_bucket{topic="t1",le="+Inf"} 5',
+        'roar_processing_latency_seconds_sum{topic="t1"} 45.78',
+        'roar_processing_latency_seconds_count{topic="t1"} 5',
+    ]
+    assert 'roar_processing_latency_seconds_bucket{topic="t2",le="0.25"} 1' in lines
+    reg.remove("roar_processing_latency_seconds", topic="t2")
+    assert 'topic="t2"' not in reg.exposition()
+
+
 def test_gauge_sweep_spares_concurrently_registered_topics():
     """update_engine_gauges drops series only for topics that existed
     BEFORE the refresh and are gone now — a gauge set concurrently for a
@@ -112,6 +138,7 @@ def test_streaming_metrics_flow(spark, tmp_path):
         assert REGISTRY.get("roar_stream_memory_bytes", topic="mx") > 0
         text = REGISTRY.exposition()
         assert "roar_kafka_messages_total" in text
+        assert 'roar_processing_latency_seconds_count{topic="mx"}' in text
         engine.stop()
     finally:
         spark.streams.removeListener(listener)
