@@ -95,11 +95,8 @@ def cmd_serve(args: argparse.Namespace) -> int:
         if not topics:
             print("serve: upstream serves no topics", file=sys.stderr)
             return 2
-        # sharded=true → partition-per-endpoint executor DoGets against an
-        # upstream serving multi-endpoint FlightInfo (--shards on ITS serve)
-        opts = {"sharded": "true"} if args.source_flight_sharded else {}
         for topic in topics:
-            ingest_from_flight(engine, topic, args.source_flight, **opts)
+            ingest_from_flight(engine, topic, args.source_flight)
     elif args.source_dir:
         from roar_spark.sources.files import file_envelope_stream, read_envelope_batch
 
@@ -428,11 +425,6 @@ def main(argv: list[str] | None = None) -> int:
         help="upstream Flight server (grpc://host:port) to replicate from",
     )
     serve.add_argument(
-        "--source-flight-sharded", action="store_true",
-        help="replicate through the partition-per-endpoint sharded reader "
-        "(upstream must serve multi-endpoint FlightInfo, i.e. --shards > 1)",
-    )
-    serve.add_argument(
         "--kafka-wire", action="store_true",
         help="read --topics through the pure-Python Kafka wire source "
         "(no spark-sql-kafka jar required) instead of format('kafka')",
@@ -456,7 +448,7 @@ def main(argv: list[str] | None = None) -> int:
     serve.add_argument(
         "--shards", type=int, default=1,
         help="endpoints per topic in this server's FlightInfo (>1 lets a "
-        "sharded consumer DoGet shards in parallel; 1 = reference parity)",
+        "--source-flight consumer DoGet shards in parallel; 1 = reference parity)",
     )
     serve.add_argument("--store-dir", default="", help="parquet retention store dir")
     serve.set_defaults(fn=cmd_serve)

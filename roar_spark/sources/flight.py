@@ -2,99 +2,44 @@
 stream into Structured Streaming (the "Structured Streaming with Arrow
 Flight source" leg of the north-star design; BASELINE.json).
 
-The read path is the reference client's exact sequence — connect →
-GetFlightInfo(path) → DoGet(ticket) → Arrow table (cmd/client.go:121-171) —
-wrapped in Spark's Python streaming data-source API so each micro-batch
-polls the server once and appends only the rows past the last checkpointed
-high-water mark:
-
     spark.dataSource.register(FlightStreamDataSource)
     (spark.readStream.format("roar_flight")
           .option("location", "grpc://host:port")
           .option("topic", "events").load())
 
-Offset model: the server's DoGet returns the buffered snapshot in append
-order, so the offset is the ROW HIGH-WATER MARK plus a HEAD FINGERPRINT,
-``{"rows": n, "head": md5(first row)}`` — batch k delivers
-``snapshot[rows_k-1:]`` and advances ``rows`` to ``len(snapshot)``.
-``maxRowsPerBatch`` rate-limits a batch exactly like Kafka's
-maxOffsetsPerTrigger (the residue stays buffered server-side and the next
-poll resumes from the mark). The roar buffer is drop-oldest under a byte
-cap (stream/manager.go AddBatch): eviction removes rows from the FRONT,
-so positions are stable exactly while the first buffered row is unchanged.
-The head fingerprint detects that directly — a positional slice is taken
-ONLY when the head row still matches the checkpointed fingerprint; any
-mismatch (eviction, stream reset, total wipe) resets the mark and
-re-delivers the whole snapshot. A bare ``len < rows`` shrink check would
-MISS an eviction masked by concurrent appends (50 evicted + 60 appended
-keeps the count growing while positions shift — rows skipped silently;
-r8 review). Net contract: exactly-once while the buffer holds,
-at-least-once across evictions — the same guarantee a reference client
-polling DoGet gets. (Known residual: a head row whose full VALUE equals
-the evicted head's is indistinguishable — md5 of every column of row 0 —
-accepted and documented.)
+Offset model: the server numbers rows the way a Kafka log does
+(flight_facade.RoarFlightServer). A store's first retained row has offset
+``first`` = its records_dropped, which drop-oldest eviction (the roar
+buffer, stream/manager.go AddBatch) only ever raises; ``gen`` names the
+store incarnation those offsets belong to. An offset is ``{"gen", "end"}``
+and a batch is the rows of ``[start.end, end.end)``.
 
-Scale path: TWO readers behind one format. The default
-``SimpleDataSourceStreamReader`` polls on the driver — correct for the
-facade's single-endpoint servers and exactly the reference client's
-single-connection behavior, but every replicated row funnels through the
-driver prefetch (~94k rows/s measured, SCALE.md). ``.option("sharded",
-"true")`` selects ``FlightShardedStreamReader`` — the full
-``DataSourceStreamReader`` with one InputPartition per endpoint of the
-server's multi-endpoint FlightInfo: the driver exchanges only offsets
-(the ``hwm`` DoAction + GetFlightInfo), and each EXECUTOR DoGets its own
-shard's slice of the batch range in parallel. Same offset model
-({rows, head} global high-water mark), server-side head re-validation per
-DoGet, at-least-once under eviction. This is the 1000-executor leg of the
-north-star design: against a real sharded Flight service (one endpoint
-per shard host) the aggregate ingest rate scales with endpoints, not with
-one driver socket.
+One reader for 1 or N endpoints: ``FlightShardedStreamReader``, one
+InputPartition per endpoint of the server's FlightInfo. The driver
+exchanges only offsets (the ``hwm`` DoAction and GetFlightInfo); each
+EXECUTOR DoGets its endpoint's rows of the batch range, the rows whose
+``offset % of`` is its shard. Against a sharded service (one endpoint per
+shard host) the ingest rate scales with endpoints, not with one socket.
+
+Contract: no row is delivered twice, and delivery is exactly-once while
+the rows are held. A row evicted before any read is skipped (the server
+serves ``[max(start, first), end)``), and a ``gen`` change — the topic
+was re-created after TTL expiry — reads the new incarnation from its
+front. ``maxRowsPerBatch`` caps a batch exactly like Kafka's
+maxOffsetsPerTrigger, also on the first trigger after a restart.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator, Tuple  # noqa: F401
+from typing import TYPE_CHECKING, Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructField, StructType
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
 
     from roar_spark.streaming.manager import StreamEngine, StreamHandle
-
-
-def _fetch_snapshot(location: str, topic: str) -> "pa.Table":
-    """The reference client's read path, shared with the CLI client
-    (flight_facade.read_topic — one copy of the GetFlightInfo → DoGet
-    sequence so the two cannot drift; r8 review). Fresh connection per
-    poll: polls are seconds apart and a cached gRPC channel would hold a
-    socket open across micro-batches for no measured gain.
-    max_endpoints=1: the positional offset model is only valid against a
-    single-endpoint (unsharded) server — a multi-shard concat interleaves
-    appends mid-snapshot; read_topic raises with the sharded-reader fix."""
-    from roar_spark.streaming.flight_facade import read_topic
-
-    return read_topic(location, topic, max_endpoints=1)
-
-
-def _head_fingerprint(table: "pa.Table") -> str | None:
-    """md5 over every column value of the snapshot's FIRST row (None for
-    an empty snapshot) — the positional-stability witness of the offset
-    model (module doc): drop-oldest eviction always changes the head."""
-    if table.num_rows == 0:
-        return None
-    import hashlib
-    import json
-
-    head = table.slice(0, 1).to_pylist()[0]
-    blob = json.dumps(head, sort_keys=True, default=str).encode()
-    return hashlib.md5(blob).hexdigest()
 
 
 def remote_spark_schema(location: str, topic: str) -> StructType:
@@ -121,31 +66,26 @@ def remote_spark_schema(location: str, topic: str) -> StructType:
     )
 
 
-def _arrow_batches(
-    table: "pa.Table", schema: StructType, pa_schema, naive_tz: str, compact: bool = True
-):
+def _arrow_batches(table: "pa.Table", schema: StructType, naive_tz: str):
     # Arrow RecordBatches, not per-row tuples: the worker read path
     # accepts either (plan_data_source_read.records_to_arrow_batches)
     # and the batch form skips the per-row Python materialization —
-    # measured 23.2 s → 10.6 s for a 1M-row replication (SCALE.md). A
-    # LIST iterator, not a generator: the engine copy.copy()s the
-    # prefetched iterator when serving the cached batch and pickles it
-    # to ship driver→executor — list iterators support both, generators
-    # neither (datasource_internal.py getCache). Columns are re-selected
-    # in schema field order, then cast to the EXACT expected arrow
-    # schema — the JVM runner asserts batch schema equality, and the
-    # remote's timestamp tz / nullability metadata need not match the
-    # session's (cast is metadata-only for tz'd timestamps: arrow
-    # stores UTC-epoch instants, so no values change). Shared by the
-    # simple (driver-prefetch) and sharded (executor DoGet) readers.
-    import numpy as np
+    # measured 23.2 s → 10.6 s for a 1M-row replication (SCALE.md).
+    # Columns are re-selected in schema field order, then cast to the
+    # EXACT expected arrow schema — the JVM runner asserts batch schema
+    # equality, and the remote's timestamp tz / nullability metadata need
+    # not match the session's (cast is metadata-only for tz'd timestamps:
+    # arrow stores UTC-epoch instants, so no values change).
     import pyarrow as pa
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
     tbl = table.select(schema.fieldNames())
     if tbl.schema != pa_schema:
         if naive_tz != "UTC":
             # naive → tz'd cast reinterprets values as UTC; apply the
-            # configured interpretation zone first (see __init__)
+            # configured interpretation zone first (naiveTimestampTimezone)
             import pyarrow.compute as pc
 
             for i, field in enumerate(tbl.schema):
@@ -159,106 +99,12 @@ def _arrow_batches(
                     col = pc.assume_timezone(tbl.column(i), naive_tz)
                     tbl = tbl.set_column(i, field.name, col)
         tbl = tbl.cast(pa_schema)
-    if compact and tbl.num_rows:
-        # COMPACT the slice: zero-copy sliced batches keep the whole
-        # parent snapshot's buffers alive inside the driver's prefetch
-        # cache until commit (a 10-row delta pinned the full 8 MB
-        # column buffer — r8 review). take() gathers into fresh
-        # delta-sized arrays. The sharded executor path passes
-        # compact=False: its table arrives fresh off the wire (read_all
-        # of an already server-side-compacted shard delta), so the
-        # gather would be a second full O(rows) copy for nothing.
-        tbl = tbl.take(np.arange(tbl.num_rows))
-    # bounded batches: a post-eviction reset re-delivers the WHOLE
-    # snapshot — without max_chunksize that is one giant RecordBatch
-    # into the JVM instead of the ~10k-row chunks the tuple path got
+    # bounded batches into the JVM, however the server chunked the stream
     return iter(tbl.to_batches(max_chunksize=10_000))
 
 
-def _pa_schema_of(reader) -> "pa.Schema":
-    """Lazy per-reader cache of to_arrow_schema(reader._schema) — built on
-    first use so the conversion runs where the rows are read (driver for
-    the simple reader, executor for the sharded one), shared by both."""
-    if reader._pa_schema is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        reader._pa_schema = to_arrow_schema(reader._schema)
-    return reader._pa_schema
-
-
-class FlightSimpleStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict) -> None:
-        self._location = options["location"]
-        self._topic = options["topic"]
-        self._schema = schema
-        self._pa_schema = None  # to_arrow_schema(schema), built on first use
-        self._max_rows = int(options.get("maxrowsperbatch", 0)) or None
-        self._starting = options.get("startingoffsets", "earliest").lower()
-        # contract for remotes serving TZ-LESS timestamps (the roar facade
-        # always serves tz'd ones): naive wall-clock values are interpreted
-        # in this zone before the cast to the expected tz'd arrow type.
-        # Default UTC — explicit and documented, where a bare cast would
-        # make the same choice silently (r8 review: the tuple path had
-        # interpreted naive values in the PROCESS-local zone, so a non-UTC
-        # box would shift values by its UTC offset without any error).
-        self._naive_tz = options.get("naivetimestamptimezone", "UTC")
-
-    def initialOffset(self) -> dict:
-        if self._starting == "latest":
-            # one bootstrap poll pins the mark at the current buffer end —
-            # Kafka's startingOffsets=latest semantics
-            table = _fetch_snapshot(self._location, self._topic)
-            return {"rows": table.num_rows, "head": _head_fingerprint(table)}
-        return {"rows": 0, "head": None}
-
-    def _rows(self, table: "pa.Table") -> Iterator:
-        return _arrow_batches(
-            table, self._schema, _pa_schema_of(self), self._naive_tz
-        )
-
-    def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        table = _fetch_snapshot(self._location, self._topic)
-        head = _head_fingerprint(table)
-        mark = start["rows"]
-        # positions are trustworthy ONLY while the head row is the one the
-        # checkpoint saw (drop-oldest evicts from the front — module doc);
-        # on any mismatch or shrink, reset and re-deliver (at-least-once)
-        if mark > 0 and (table.num_rows < mark or head != start.get("head")):
-            mark = 0
-        sliced = table.slice(mark)
-        if self._max_rows is not None and sliced.num_rows > self._max_rows:
-            sliced = sliced.slice(0, self._max_rows)
-        return self._rows(sliced), {"rows": mark + sliced.num_rows, "head": head}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
-        # failure replay of a checkpointed batch: re-poll and re-slice. If
-        # the batch was a post-eviction reset (its end head differs from
-        # its start head, or the range inverted), the live read delivered
-        # snapshot[0:end.rows] — replay that, not the inverted positional
-        # slice (which returned EMPTY and lost the batch; r8 review).
-        # Exact while the buffer still holds those rows; under further
-        # eviction the replay is best-effort, same as the live path.
-        table = _fetch_snapshot(self._location, self._topic)
-        reset = end["rows"] < start["rows"] or end.get("head") != start.get("head")
-        # positions in the NEW snapshot are trustworthy only while its head
-        # row is still the one the checkpointed batch saw — the same rule
-        # the live read applies. If eviction happened between the live read
-        # and this replay, a positional slice would silently substitute
-        # DIFFERENT rows (worse than re-delivering); fall back to
-        # slice(0, end.rows) — best-effort re-delivery from the front,
-        # mirroring the live path's reset behavior (r8 advice).
-        if _head_fingerprint(table) != end.get("head"):
-            reset = True
-        lo = 0 if reset else min(start["rows"], table.num_rows)
-        hi = min(end["rows"], table.num_rows)
-        return self._rows(table.slice(lo, max(hi - lo, 0)))
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing to release server-side: DoGet is a stateless snapshot
-
-
 class FlightShardPartition(InputPartition):
-    """One Flight endpoint's ranged shard read — what a single Spark task
+    """One Flight endpoint's ranged read — what a single Spark task
     DoGets. Picklable by construction (two strings)."""
 
     def __init__(self, location: str, ticket: str) -> None:
@@ -267,37 +113,32 @@ class FlightShardPartition(InputPartition):
 
 
 class FlightShardedStreamReader(DataSourceStreamReader):
-    """The 1000-executor variant of the Flight source (module doc): a full
-    ``DataSourceStreamReader`` with one InputPartition per advertised
-    Flight endpoint — EXECUTORS DoGet their shards in parallel, nothing
-    row-shaped crosses the driver. Per trigger the driver makes exactly
-    two metadata RPCs: the ``hwm`` DoAction (global row high-water mark +
-    head fingerprint — the same offset model as the simple reader) and
-    GetFlightInfo (the live endpoint list, re-polled per batch so a
-    service that re-shards is picked up without restart).
-
-    Each InputPartition's ticket embeds the batch's global row range
-    [start, end) plus the start head fingerprint; the SERVER slices its
-    snapshot to the range (re-validating the head against its own state —
-    eviction between the driver's poll and an executor's DoGet resets
-    that shard to the front, at-least-once) and filters to the shard by a
-    stable content hash, so a row keeps its shard across snapshots and
-    drop-oldest eviction still removes a prefix of every shard's
-    subsequence (flight_facade.RoarFlightServer doc).
-
-    ``maxRowsPerBatch`` caps steady-state triggers from driver-side state;
-    the first trigger after a RESTART is uncapped (the checkpointed start
-    is not visible to latestOffset) — documented divergence from Kafka's
-    maxOffsetsPerTrigger."""
+    """The Flight source's reader (module doc): a ``DataSourceStreamReader``
+    with one InputPartition per advertised Flight endpoint — EXECUTORS
+    DoGet their endpoints in parallel, nothing row-shaped crosses the
+    driver. Per trigger the driver makes exactly two metadata RPCs: the
+    ``hwm`` DoAction (``latestOffset``) and GetFlightInfo (``partitions``:
+    the live endpoint list, re-polled per batch so a service that
+    re-shards is picked up without restart). Each partition's ticket is
+    its endpoint's ticket plus the batch's ``{gen, start, end}``."""
 
     def __init__(self, schema: StructType, options: dict) -> None:
         self._location = options["location"]
         self._topic = options["topic"]
         self._schema = schema
-        self._pa_schema = None
         self._max_rows = int(options.get("maxrowsperbatch", 0)) or None
         self._starting = options.get("startingoffsets", "earliest").lower()
+        # contract for remotes serving TZ-LESS timestamps (the roar facade
+        # always serves tz'd ones): naive wall-clock values are interpreted
+        # in this zone before the cast to the expected tz'd arrow type.
+        # Default UTC — explicit and documented, where a bare cast would
+        # make the same choice silently.
         self._naive_tz = options.get("naivetimestamptimezone", "UTC")
+        # the end of the last planned batch: where maxRowsPerBatch counts
+        # from. On a first start that is initialOffset(); on a restart
+        # partitions()/commit() seed it, which Spark calls with the
+        # checkpointed offsets before the next latestOffset (as its own
+        # _SimpleStreamReaderWrapper relies on)
         self._last_end: dict | None = None
 
     def _hwm(self) -> dict:
@@ -314,43 +155,34 @@ class FlightShardedStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         if self._starting == "latest":
-            return self._hwm()
-        return {"rows": 0, "head": None}
+            hwm = self._hwm()
+            return {"gen": hwm["gen"], "end": hwm["end"]}
+        # no gen: the first batch reads the live incarnation from its front
+        return {"gen": None, "end": 0}
 
     def latestOffset(self) -> dict:
-        off = self._hwm()
+        if self._last_end is None:  # first start: nothing planned yet
+            self._last_end = self.initialOffset()
+        hwm = self._hwm()
+        end = hwm["end"]
         last = self._last_end
-        if (
-            self._max_rows is not None
-            and last is not None
-            and off.get("head") == last.get("head")  # capping positions is
-            # only meaningful while they share the head's frame of reference
-            and off.get("epoch") == last.get("epoch")  # ...and no eviction
-            # re-based them, even if the new head matches by value
-            and off["rows"] > last["rows"] + self._max_rows
-        ):
-            off = dict(off, rows=last["rows"] + self._max_rows)
-        self._last_end = off
-        return off
+        if self._max_rows is not None:
+            # count from the first row the next batch can deliver: past the
+            # last end within one incarnation, the front of a new one
+            lo = last["end"] if last["gen"] == hwm["gen"] else 0
+            end = min(end, max(lo, hwm["first"]) + self._max_rows)
+        self._last_end = {"gen": hwm["gen"], "end": end}
+        return self._last_end
 
     def partitions(self, start: dict, end: dict) -> list:
         import json
 
         import pyarrow.flight as flight
 
-        # the reset decision is the simple reader's live rule, made once
-        # here; each server-side DoGet re-validates against ITS snapshot.
-        # The epoch arm catches the one case the value-based head check
-        # can't: an eviction whose new head row equals the old one by
-        # value (duplicate rows; r9 ADVICE). Missing epochs (pre-epoch
-        # checkpoints) compare as None == None — value check only.
-        reset = (
-            end["rows"] < start["rows"]
-            or end.get("head") != start.get("head")
-            or end.get("epoch") != start.get("epoch")
-        )
-        lo = 0 if reset else start["rows"]
-        if end["rows"] <= lo:
+        if self._last_end is None:
+            self._last_end = end
+        lo = start["end"] if start["gen"] == end["gen"] else 0
+        if end["end"] <= lo:
             return []  # empty range (start == end trigger)
         client = flight.connect(self._location)
         try:
@@ -360,21 +192,14 @@ class FlightShardedStreamReader(DataSourceStreamReader):
         parts = []
         for ep in info.endpoints:
             try:
-                spec = json.loads(ep.ticket.ticket.decode())
-            except (UnicodeDecodeError, ValueError):
+                spec = json.loads(ep.ticket.ticket)
+            except ValueError:  # a plain-topic ticket (or bad UTF-8)
                 spec = None
             if not isinstance(spec, dict) or "topic" not in spec:
-                # unsharded server: one plain-topic endpoint — still serve
-                # it through the ranged path (shard filter is a no-op)
+                # unsharded server: one plain-topic endpoint — read it
+                # through the ranged path as the one shard of one
                 spec = {"topic": self._topic}
-            spec.update(
-                {
-                    "start": lo,
-                    "start_head": start.get("head"),
-                    "start_epoch": start.get("epoch"),
-                    "end": end["rows"],
-                }
-            )
+            spec.update({"gen": end["gen"], "start": lo, "end": end["end"]})
             locations = [loc.uri.decode() for loc in ep.locations]
             parts.append(
                 FlightShardPartition(
@@ -385,7 +210,7 @@ class FlightShardedStreamReader(DataSourceStreamReader):
 
     def read(self, partition: FlightShardPartition) -> Iterator:
         # EXECUTOR-side: fresh connection per (task, trigger), DoGet of
-        # exactly this shard's delta, Arrow RecordBatch pass-through
+        # exactly this endpoint's rows of the range, Arrow pass-through
         import pyarrow.flight as flight
 
         client = flight.connect(partition.location)
@@ -393,14 +218,12 @@ class FlightShardedStreamReader(DataSourceStreamReader):
             table = client.do_get(flight.Ticket(partition.ticket.encode())).read_all()
         finally:
             client.close()
-        # compact=False: the table is fresh wire buffers of an already
-        # server-side-compacted shard delta — nothing larger is pinned
-        return _arrow_batches(
-            table, self._schema, _pa_schema_of(self), self._naive_tz, compact=False
-        )
+        return _arrow_batches(table, self._schema, self._naive_tz)
 
     def commit(self, end: dict) -> None:
-        pass  # nothing to release server-side: DoGet is a stateless snapshot
+        # nothing to release server-side: DoGet is a stateless snapshot
+        if self._last_end is None:
+            self._last_end = end
 
 
 class FlightStreamDataSource(DataSource):
@@ -408,10 +231,7 @@ class FlightStreamDataSource(DataSource):
     ``topic`` (served stream name), ``maxRowsPerBatch`` (rate limit),
     ``startingOffsets`` (earliest|latest, default earliest),
     ``naiveTimestampTimezone`` (zone for interpreting TZ-LESS remote
-    timestamps, default UTC — the roar facade always serves tz'd ones),
-    ``sharded`` (true|false, default false — partition-per-endpoint
-    executor reads against a multi-endpoint/sharded server; the default
-    driver-prefetch reader refuses such servers with the fix)."""
+    timestamps, default UTC — the roar facade always serves tz'd ones)."""
 
     @classmethod
     def name(cls) -> str:
@@ -420,15 +240,8 @@ class FlightStreamDataSource(DataSource):
     def schema(self) -> StructType:
         return remote_spark_schema(self.options["location"], self.options["topic"])
 
-    def streamReader(self, schema: StructType) -> "FlightShardedStreamReader":
-        if self.options.get("sharded", "false").lower() == "true":
-            return FlightShardedStreamReader(schema, self.options)
-        # PySparkNotImplementedError → Spark falls back to simpleStreamReader
-        # (datasource_internal._streamReader)
-        return super().streamReader(schema)
-
-    def simpleStreamReader(self, schema: StructType) -> FlightSimpleStreamReader:
-        return FlightSimpleStreamReader(schema, self.options)
+    def streamReader(self, schema: StructType) -> FlightShardedStreamReader:
+        return FlightShardedStreamReader(schema, self.options)
 
 
 def flight_envelope_stream(
@@ -437,8 +250,7 @@ def flight_envelope_stream(
     """Streaming DataFrame of the remote stream's TYPED rows (registers the
     data source on this session idempotently). Pass ``schema`` when the
     caller already fetched it — a user-provided schema skips the data
-    source's own GetSchema round-trip (r8 review: ingest_from_flight paid
-    2 RPCs per topic at startup)."""
+    source's own GetSchema round-trip."""
     spark.dataSource.register(FlightStreamDataSource)
     reader = (
         spark.readStream.format("roar_flight")

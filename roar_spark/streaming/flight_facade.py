@@ -18,7 +18,8 @@ Surface parity (SURVEY.md §2 A22-A26):
 - DoGet        → snapshot of the buffered batches as a record stream;
   empty stream OK (flight/server.go:171-208)
 - DoAction     → "health" → "OK"; "listTopics" → comma-joined names;
-  anything else → NOT_IMPLEMENTED (flight/server.go:233-245)
+  anything else → NOT_IMPLEMENTED (flight/server.go:233-245). One
+  addition: "hwm" → the topic's row offsets (RoarFlightServer)
 
 The data path is Arrow end-to-end and Spark-free: every DoGet streams
 the store's cached Arrow snapshot (``snapshot_arrow``, one per store
@@ -31,6 +32,7 @@ this engine instead.
 
 from __future__ import annotations
 
+import json
 import threading
 
 import pyarrow as pa
@@ -40,18 +42,26 @@ from roar_spark.streaming.manager import StreamEngine
 
 
 class RoarFlightServer(flight.FlightServerBase):
-    """``shards > 1`` turns on the SHARDED serving surface — the
-    reference's FlightInfo endpoint list used as the extension point it
-    is (flight/server.go:95-122): GetFlightInfo advertises one endpoint
-    per shard (JSON ticket ``{"topic", "shard", "of"}``), DoGet of a
-    shard ticket serves only that shard's rows (stable content-hash
-    row→shard assignment — a row keeps its shard across snapshots, so
-    drop-oldest eviction still removes a PREFIX of every shard's
-    subsequence and the per-range offset model stays valid), and the
-    ``hwm`` DoAction serves the O(1) global high-water mark the sharded
-    streaming source polls per trigger (sources/flight.py). Every DoGet,
-    plain or shard, is served from ONE cached Arrow materialization per
-    store version — N readers in parallel cost one snapshot, not N."""
+    """Serves the engine's streams with rows numbered the way a Kafka log
+    numbers them: a store's first retained row has offset
+    ``records_dropped`` (monotone: drop-oldest eviction only ever removes
+    the front), so a snapshot is offsets ``[first, first + num_rows)`` of
+    incarnation ``gen``, a token the store object sets once.
+
+    - ``hwm`` DoAction → ``{"gen", "first", "end"}``: the streaming
+      source's per-trigger offset poll (sources/flight.py).
+    - A ranged JSON ticket ``{..., "gen", "start", "end"}`` serves the rows
+      of ``[max(start, first), min(end, end_now))`` — nothing when ``gen``
+      no longer matches, because that incarnation's rows are gone.
+    - ``shards > 1`` advertises one endpoint per shard in GetFlightInfo
+      (JSON ticket ``{"topic", "shard", "of"}``), the reference's endpoint
+      list used as the extension point it is (flight/server.go:95-122). A
+      row's shard is ``offset % of``, so a row keeps its shard across
+      snapshots and any ``of`` partitions a range.
+
+    Every DoGet, plain or shard, is served from ONE cached Arrow
+    materialization per store version — N readers in parallel cost one
+    snapshot, not N."""
 
     def __init__(
         self, engine: StreamEngine, location: str = "grpc://0.0.0.0:0", shards: int = 1
@@ -100,11 +110,9 @@ class RoarFlightServer(flight.FlightServerBase):
         location = f"grpc://localhost:{self.port}"
         if self._shards > 1:
             # one endpoint per shard: a partition-aware client (the
-            # sharded streaming source) DoGets each in parallel; the
-            # locations all point at this server — a multi-node service
-            # would list each shard's own host here, with no client change
-            import json
-
+            # streaming source) DoGets each in parallel; the locations all
+            # point at this server — a multi-node service would list each
+            # shard's own host here, with no client change
             endpoints = [
                 flight.FlightEndpoint(
                     json.dumps(
@@ -161,14 +169,7 @@ class RoarFlightServer(flight.FlightServerBase):
         """One Arrow materialization per store version (Spark-free —
         MemoryStore concat / ParquetStore pyarrow read), shared by the
         hwm action and every DoGet, plain or shard. Counts as a data
-        read: TTL refresh + request counter via engine.touch. The entry
-        also lazily carries the row-hash vector for shard filtering —
-        computed ONCE per version, not once per DoGet (8 shards × a 2.2 s
-        GIL-bound hash of a 1M-row delta made the sharded path SLOWER
-        than the driver-prefetch one it exists to beat; measured r9), and
-        carried FORWARD across versions while the head row is unchanged
-        (append-only prefix property), so steady-state serving hashes
-        only each trigger's appended delta, not all retained rows."""
+        read: TTL refresh + request counter via engine.touch."""
         try:
             handle = self._engine.touch(topic)
         except KeyError:
@@ -177,8 +178,8 @@ class RoarFlightServer(flight.FlightServerBase):
         # prune entries whose topic died WITHOUT a later request for it —
         # the janitor can expire a multi-GB replicated topic that no client
         # ever asks about again, and the KeyError path above would then
-        # never fire, pinning its snapshot for the server's lifetime
-        # (r9 review). list_streams is a lock-guarded dict-keys read.
+        # never fire, pinning its snapshot for the server's lifetime.
+        # list_streams is a lock-guarded dict-keys read.
         if len(self._snap_cache) > 1:
             live = set(self._engine.list_streams())
             for dead in [t for t in self._snap_cache if t != topic and t not in live]:
@@ -190,39 +191,8 @@ class RoarFlightServer(flight.FlightServerBase):
         cached = self._snap_cache.get(topic)
         if cached is not None and cached["store"] is store and cached["version"] == version:
             return cached
-        from roar_spark.sources.flight import _head_fingerprint
-
-        epoch_pre = store.evict_epoch  # pre-snapshot read: gates the
-        # carry-forward below (an eviction DURING materialization bumps
-        # the post-read and the gate refuses — conservative, like version)
-        table = store.snapshot_arrow()
-        epoch = store.evict_epoch
-        entry = {"store": store, "version": version, "table": table,
-                 "head": _head_fingerprint(table), "epoch": epoch,
-                 "hashes": None, "hash_lock": threading.Lock()}
-        if (
-            cached is not None
-            and cached["store"] is store
-            and cached["hashes"] is not None
-            # eviction EPOCH equality, not just head-value equality: a
-            # drop-oldest landing on a head whose scalar values equal the
-            # old head's (duplicate rows) passes the fingerprint check and
-            # silently misaligns the carried hash vector with the table —
-            # the store-side counter is drop-evidence the values can't
-            # fake (r9 ADVICE). epoch_pre == epoch additionally refuses a
-            # carry when eviction raced this very materialization.
-            and cached["epoch"] == epoch_pre == epoch
-            and entry["head"] == cached["head"]
-            and entry["head"] is not None
-            and table.num_rows >= cached["table"].num_rows
-        ):
-            # append-only prefix property: the store only removes rows from
-            # the FRONT (drop-oldest), so an unchanged head row means the
-            # previous snapshot is a prefix of this one — its row hashes
-            # carry forward and only the appended delta gets hashed
-            # (steady-state sharded serving was re-hashing ALL retained
-            # rows per version bump, O(retention) not O(delta); r9 review)
-            entry["prev_hashes"] = cached["hashes"][: cached["table"].num_rows]
+        first, table = store.snapshot_arrow()
+        entry = {"store": store, "version": version, "first": first, "table": table}
         self._snap_cache[topic] = entry
         return entry
 
@@ -232,115 +202,57 @@ class RoarFlightServer(flight.FlightServerBase):
     def _hwm(self, topic: str) -> dict:
         entry = self._snapshot_entry(topic)
         return {
-            "rows": entry["table"].num_rows,
-            "head": entry["head"],
-            # the sharded source carries the epoch through its offsets so
-            # ranged reads can detect an eviction even when the new head
-            # equals the old one by value (see _snapshot_entry)
-            "epoch": entry["epoch"],
+            "gen": entry["store"].gen,
+            "first": entry["first"],
+            "end": entry["first"] + entry["table"].num_rows,
         }
 
     @staticmethod
-    def _row_hashes(table: pa.Table):
-        """Stable row→shard hash basis: vectorized pandas row hash over
-        the SCALAR columns (value-based, so a row keeps its shard across
-        snapshots — the property the per-range offset model needs; rows
-        equal on their scalar projection sharing a shard is harmless).
-        All-nested schemas fall back to a per-row JSON hash. Shard i of n
-        keeps rows where ``hash % n == i``."""
-        import numpy as np
-
-        scalar = [
-            f.name for f in table.schema if not pa.types.is_nested(f.type)
-        ]
-        if scalar:
-            import pandas as pd
-
-            h = pd.util.hash_pandas_object(
-                table.select(scalar).to_pandas(), index=False
-            ).to_numpy()
-        else:
-            import hashlib
-            import json
-
-            h = np.fromiter(
-                (
-                    int.from_bytes(
-                        hashlib.md5(
-                            json.dumps(r, sort_keys=True, default=str).encode()
-                        ).digest()[:8],
-                        "big",
-                    )
-                    for r in table.to_pylist()
-                ),
-                dtype=np.uint64,
-                count=table.num_rows,
-            )
-        return h.astype(np.uint64, copy=False)
+    def _ticket_spec(raw: bytes) -> dict:
+        """A DoGet ticket as a spec: a plain topic name (server.go:118), or
+        a JSON object ``{"topic", "shard"?, "of"?, "gen"?, "start"?,
+        "end"?}``. The ticket comes from the client, so a JSON ticket is
+        validated; a ValueError reaches the client as ArrowInvalid."""
+        if raw[:1] != b"{":  # a topic named like a JSON object is unsupported
+            return {"topic": raw.decode(), "shard": 0, "of": 1}
+        spec = json.loads(raw)  # malformed JSON or UTF-8: a ValueError too
+        if not isinstance(spec, dict) or not isinstance(spec.get("topic"), str):
+            raise ValueError("ticket: a JSON ticket needs a string 'topic'")
+        for key in ("shard", "of", "start", "end"):
+            if key in spec and type(spec[key]) is not int:
+                raise ValueError(f"ticket: {key!r} must be an integer")
+        of = spec.setdefault("of", 1)
+        shard = spec.setdefault("shard", 0)
+        if of < 1 or not 0 <= shard < of:
+            raise ValueError(f"ticket: need 0 <= shard < of, got shard={shard}, of={of}")
+        if ("start" in spec) != ("end" in spec):
+            raise ValueError("ticket: a ranged ticket needs both 'start' and 'end'")
+        if "end" in spec:
+            if spec["start"] > spec["end"]:
+                raise ValueError("ticket: 'start' is past 'end'")
+            if not isinstance(spec.get("gen"), str):
+                raise ValueError("ticket: a ranged ticket needs a string 'gen'")
+        return spec
 
     def do_get(self, context, ticket):  # A25
-        raw = ticket.ticket
-        spec = None
-        if raw[:1] == b"{":  # sharded JSON ticket (a literal topic named
-            # like a JSON object is pathological and unsupported)
-            import json
-
-            try:
-                spec = json.loads(raw.decode())
-            except (UnicodeDecodeError, ValueError):
-                spec = None
-        if not isinstance(spec, dict) or "topic" not in spec:
-            spec = {"topic": raw.decode()}  # plain-topic ticket (server.go:118)
+        spec = self._ticket_spec(ticket.ticket)
         entry = self._snapshot_entry(spec["topic"])
-        table = entry["table"]
-        lo, hi = 0, table.num_rows
+        table, first = entry["table"], entry["first"]
+        lo, hi = first, first + table.num_rows
         if "end" in spec:
-            # ranged read: the sharded source's per-batch delta. Positions
-            # are trusted only while the snapshot's head row is the one
-            # the start offset saw (drop-oldest evicts from the front) —
-            # the same rule as the simple source's live read; on mismatch
-            # reset to the front (at-least-once re-delivery).
-            lo = int(spec.get("start", 0))
-            start_epoch = spec.get("start_epoch")
-            if lo > 0 and (
-                table.num_rows < lo
-                or entry["head"] != spec.get("start_head")
-                # epoch mismatch = an eviction happened since the start
-                # offset was minted, even if the new head row compares
-                # equal by value (duplicate rows; r9 ADVICE). Absent on
-                # tickets minted by pre-epoch sources — value check only.
-                or (start_epoch is not None and entry["epoch"] != start_epoch)
-            ):
-                lo = 0
-            hi = min(int(spec["end"]), table.num_rows)
-        delta = table.slice(lo, max(hi - lo, 0))
-        of = int(spec.get("of", 1))
+            # ranged read: the rows of offsets [start, end) still held. A
+            # different gen means the store was re-created: the range's rows
+            # are gone with the old incarnation.
+            if spec["gen"] != entry["store"].gen:
+                hi = lo
+            lo, hi = max(spec["start"], lo), min(spec["end"], hi)
+        delta = table.slice(lo - first, max(hi - lo, 0))
+        of, shard = spec["of"], spec["shard"]
         if of > 1 and delta.num_rows:
+            # a row's shard is its offset modulo of
             import numpy as np
 
-            if entry["hashes"] is None:
-                # once per store version, UNDER A LOCK: a trigger's N shard
-                # DoGets arrive together, and without the double-checked
-                # lock all N computed the GIL-bound row hash concurrently —
-                # 8 × ~9 s at 4M rows made the first trigger 83 s (r9 bench)
-                with entry["hash_lock"]:
-                    if entry["hashes"] is None:
-                        base = entry.pop("prev_hashes", None)
-                        if base is not None:
-                            # prefix carry-forward (see _snapshot_entry):
-                            # hash only the rows appended since the
-                            # previous snapshot
-                            delta_rows = table.slice(len(base))
-                            entry["hashes"] = (
-                                np.concatenate([base, self._row_hashes(delta_rows)])
-                                if delta_rows.num_rows
-                                else base
-                            )
-                        else:
-                            entry["hashes"] = self._row_hashes(table)
-            h = entry["hashes"][lo:hi]
-            keep = np.nonzero(h % np.uint64(of) == int(spec["shard"]))[0]
-            delta = delta.take(keep)
+            delta = delta.take(np.arange((shard - lo) % of, delta.num_rows, of))
         return flight.RecordBatchStream(delta)
 
     def do_action(self, context, action):  # A26
@@ -349,10 +261,7 @@ class RoarFlightServer(flight.FlightServerBase):
         if action.type == "listTopics":
             return [",".join(self._engine.list_streams()).encode()]
         if action.type == "hwm":
-            # O(1)-amortized global high-water mark for the sharded source's
-            # latestOffset poll: {"rows": snapshot rows, "head": fingerprint}
-            import json
-
+            # the streaming source's per-trigger offset poll (class doc)
             return [json.dumps(self._hwm(action.body.to_pybytes().decode())).encode()]
         raise NotImplementedError(f"action {action.type!r}")
 
@@ -365,8 +274,8 @@ def serve_in_thread(
 ) -> RoarFlightServer:
     """Start the facade on a daemon thread and block until it is
     ACCEPTING CONNECTIONS; returns the running server (``server.port``
-    carries the bound port). ``shards > 1`` advertises the multi-endpoint
-    FlightInfo the sharded streaming source consumes.
+    carries the bound port). ``shards > 1`` advertises a multi-endpoint
+    FlightInfo, one streaming-source partition per endpoint.
 
     The readiness wait is load-bearing product behavior, not a test
     convenience: ``FlightServerBase`` binds the port in its constructor
@@ -418,60 +327,41 @@ def serve_in_thread(
 
 def list_topics(location: str) -> list[str]:
     client = flight.connect(location)
-    return [info.descriptor.path[0].decode() for info in client.list_flights()]
+    try:
+        return [info.descriptor.path[0].decode() for info in client.list_flights()]
+    finally:
+        client.close()
 
 
-def read_topic(
-    location: str,
-    topic: str,
-    max_endpoints: int | None = None,
-    plain_on_sharded: bool = False,
-) -> pa.Table:
+def read_topic(location: str, topic: str, plain_on_sharded: bool = False) -> pa.Table:
     """GetFlightInfo → DoGet → read_all, connection closed — the reference
-    client's exact read path (cmd/client.go:121-171), shared by the CLI
-    client below and the streaming source (sources/flight.py) so the two
-    copies cannot drift (r8 review: the facade copy leaked the channel).
-    Every advertised endpoint is read (Flight's contract: the full stream
-    is the union of the endpoints) — identical to the reference's single
-    DoGet against its one-endpoint server, and correct against a sharded
-    server where endpoints[0] alone would silently serve 1/N of the rows.
-
-    ``max_endpoints`` lets positional consumers refuse sharded servers:
-    the simple streaming source's row-count offset model needs appends to
-    land at the END of the snapshot, and a multi-shard concat interleaves
-    new rows mid-snapshot (each shard appends to its own tail) — it passes
-    1 and raises with the fix (``sharded=true``) instead of silently
-    dropping rows.
+    client's exact read path (cmd/client.go:121-171), used by the CLI
+    client below. Every advertised endpoint is read (Flight's contract:
+    the full stream is the union of the endpoints) — identical to the
+    reference's single DoGet against its one-endpoint server, and correct
+    against a sharded server where endpoints[0] alone would silently serve
+    1/N of the rows.
 
     ``plain_on_sharded`` is the head-of-buffer consumer's mode
     (fetch_topic): against a multi-endpoint server, DoGet the PLAIN-TOPIC
     ticket on this same connection instead of the endpoint list —
     endpoint concat order is shard order, so a positional head slice of
-    it would be a content-hash-arbitrary subset where the reference
-    client returns the oldest buffered rows. The endpoint-count probe and
-    the read share ONE connection and ONE GetFlightInfo (r9 ADVICE: the
-    old fetch_topic opened a second connection and repeated both)."""
+    it would be every ``of``-th row where the reference client returns
+    the oldest buffered rows. The endpoint-count probe and the read share
+    ONE connection and ONE GetFlightInfo."""
     client = flight.connect(location)
     try:
         info = client.get_flight_info(flight.FlightDescriptor.for_path(topic))
         if plain_on_sharded and len(info.endpoints) > 1:
             return client.do_get(flight.Ticket(topic.encode())).read_all()
-        if max_endpoints is not None and len(info.endpoints) > max_endpoints:
-            raise ValueError(
-                f"topic {topic!r} at {location} advertises "
-                f"{len(info.endpoints)} endpoints; this consumer's "
-                "positional offset model supports only "
-                f"{max_endpoints} — use the sharded reader "
-                "(.option('sharded', 'true'))"
-            )
         parts = []
         for ep in info.endpoints:
             # honor each endpoint's advertised location (Flight's contract:
             # the ticket is only redeemable where the endpoint says) — a
             # multi-node sharded service lists each shard's own host, and
             # sending every ticket to the GetFlightInfo node would DoGet
-            # shards that node doesn't hold (r9 review; the sharded
-            # streaming source already did this via locations[0])
+            # shards that node doesn't hold (the streaming source does the
+            # same via locations[0])
             ep_loc = ep.locations[0].uri.decode() if ep.locations else location
             if ep_loc == location:
                 parts.append(client.do_get(ep.ticket).read_all())
@@ -493,8 +383,8 @@ def fetch_topic(location: str, topic: str, limit: int = 10) -> pa.Table:
     Against a SHARDED server a limited fetch DoGets the PLAIN-TOPIC ticket
     instead of the endpoint list (read_topic's ``plain_on_sharded`` —
     endpoint concat order is shard order, so a head slice of it would be
-    a content-hash-arbitrary subset where the reference client returns
-    the oldest buffered rows; r9 review). The plain ticket streams the
+    every ``of``-th row where the reference client returns the oldest
+    buffered rows). The plain ticket streams the
     ENTIRE buffer (the server's cached snapshot of it) to serve a few
     head rows — that is the reference's own client-side-limit semantics
     (the server always streams the full buffer and the client truncates,

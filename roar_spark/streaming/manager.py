@@ -54,6 +54,7 @@ import os
 import shutil
 import threading
 import time
+import uuid
 from collections import deque
 from dataclasses import dataclass, field
 
@@ -94,12 +95,10 @@ class MemoryStore:
         # facade cache one snapshot materialization per buffer state and
         # serve every DoGet + the hwm action from it (flight_facade)
         self.version = 0
-        # monotone EVICTION counter (front drop/close only): the facade's
-        # positional trust checks key on this, not on a value-based head
-        # fingerprint — duplicate rows can make a post-eviction head
-        # compare equal by VALUE and silently misalign carried row hashes
-        # / ranged reads (r9 ADVICE)
-        self.evict_epoch = 0
+        # incarnation token: row offsets (records_dropped + position) are
+        # only comparable within one store object, like a Kafka log's
+        # offsets within one topic; unique across processes
+        self.gen = uuid.uuid4().hex
 
     def append(self, batch_df: DataFrame) -> int:
         table = batch_df.toArrow()
@@ -118,7 +117,6 @@ class MemoryStore:
                     old, old_size = self._batches.popleft()
                     self._bytes -= old_size
                     self.records_dropped += old.num_rows
-                    self.evict_epoch += 1
                 # reference parity (Stream.AddBatch, stream/manager.go:286-345):
                 # the NEW batch is always appended, even when it alone exceeds
                 # the cap — the buffer runs over-cap until the next batch
@@ -130,25 +128,28 @@ class MemoryStore:
         return table.num_rows
 
     def snapshot(self, spark: SparkSession) -> DataFrame:
-        table = self.snapshot_arrow()
+        _, table = self.snapshot_arrow()
         if not table.num_rows:
             return spark.createDataFrame([], self._schema)
         return spark.createDataFrame(table)
 
-    def snapshot_arrow(self) -> "object":
-        """Snapshot as an Arrow table WITHOUT a Spark round-trip — what
-        every Flight DoGet serves (one materialization per store version,
-        shared by all readers). Zero-copy: the buffered RecordBatches are
-        already Arrow."""
+    def snapshot_arrow(self) -> "tuple[int, object]":
+        """``(first, table)``: the snapshot as an Arrow table WITHOUT a
+        Spark round-trip — what every Flight DoGet serves (one
+        materialization per store version, shared by all readers) — and
+        the offset of its first row. Row offsets count from the store's
+        first append, so ``first`` is ``records_dropped``, read under the
+        same lock as the batch list. Zero-copy: the buffered RecordBatches
+        are already Arrow."""
         import pyarrow as pa
 
         with self._lock:
-            batches = [b for b, _ in self._batches]
+            first, batches = self.records_dropped, [b for b, _ in self._batches]
         if not batches:
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            return to_arrow_schema(self._schema).empty_table()
-        return pa.Table.from_batches(batches)
+            return first, to_arrow_schema(self._schema).empty_table()
+        return first, pa.Table.from_batches(batches)
 
     @property
     def current_bytes(self) -> int:
@@ -167,7 +168,6 @@ class MemoryStore:
             self._batches.clear()
             self._bytes = 0
             self.version += 1
-            self.evict_epoch += 1
         return []
 
 
@@ -181,8 +181,6 @@ class ParquetStore:
     def __init__(
         self, schema: T.StructType, max_bytes: int, base: str, *, batch_size: int
     ) -> None:
-        import uuid
-
         self._schema = schema
         self._max_bytes = max_bytes
         self._batch_size = batch_size
@@ -194,7 +192,8 @@ class ParquetStore:
         # batch ids never collide across incarnations. External readers
         # (cli --store-dir) already use recursiveFileLookup, so the extra
         # level is invisible to them.
-        self._root = os.path.join(base, f"gen-{uuid.uuid4().hex[:8]}")
+        self.gen = uuid.uuid4().hex
+        self._root = os.path.join(base, f"gen-{self.gen[:8]}")
         self._batches: deque = deque()  # (path, nbytes, num_rows)
         self._bytes = 0
         self._next_id = 0
@@ -202,10 +201,8 @@ class ParquetStore:
         self.batches_created = 0
         self._closed = False
         self._lock = threading.Lock()
-        # monotone mutation counter — see MemoryStore.version
+        # monotone mutation counter and incarnation token — see MemoryStore
         self.version = 0
-        # monotone eviction counter — see MemoryStore.evict_epoch
-        self.evict_epoch = 0
         # dirs evicted from the batch list but not yet deleted: physical
         # deletion is DEFERRED one append generation so an in-flight
         # snapshot scan (lazy — file listing resolves at action time)
@@ -262,7 +259,6 @@ class ParquetStore:
                 old_path, old_size, old_rows = self._batches.popleft()
                 self._bytes -= old_size
                 self.records_dropped += old_rows
-                self.evict_epoch += 1
                 self._doomed.append(old_path)
             # always append the new batch (reference parity — see MemoryStore)
             self._batches.append((path, size, rows))
@@ -280,10 +276,10 @@ class ParquetStore:
             return spark.createDataFrame([], self._schema)
         return spark.read.schema(self._schema).parquet(*paths)
 
-    def snapshot_arrow(self) -> "object":
-        """Snapshot as an Arrow table WITHOUT a Spark job — what every
-        Flight DoGet serves. Reads the batch dirs with pyarrow in append
-        order (deterministic: sorted file listing per dir) and casts to
+    def snapshot_arrow(self) -> "tuple[int, object]":
+        """``(first, table)`` as MemoryStore.snapshot_arrow, WITHOUT a Spark
+        job. Reads the batch dirs with pyarrow in append order
+        (deterministic: sorted file listing per dir) and casts to
         the ALL-NULLABLE form of the frozen schema, as Spark's parquet
         read of them does: the data need not keep the frozen non-null
         flags (a field missing from a message parses to NULL; nested
@@ -298,11 +294,11 @@ class ParquetStore:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         with self._lock:
-            paths = [p for p, _, _ in self._batches]
+            first, paths = self.records_dropped, [p for p, _, _ in self._batches]
         if not paths:
-            return to_arrow_schema(self._schema).empty_table()
+            return first, to_arrow_schema(self._schema).empty_table()
         target = to_arrow_schema(self._schema._as_nullable())
-        return pa.Table.from_batches(
+        return first, pa.Table.from_batches(
             [
                 batch
                 for p in paths
@@ -335,7 +331,6 @@ class ParquetStore:
             self._doomed.clear()
             self._bytes = 0
             self.version += 1
-            self.evict_epoch += 1
         if deferred:
             return [self._root]
         shutil.rmtree(self._root, ignore_errors=True)

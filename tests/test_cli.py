@@ -294,10 +294,11 @@ def test_serve_requires_some_source(capsys):
 
 
 def test_serve_sharded_flags_wire_through(spark, tmp_path):
-    """`serve --shards N` serves multi-endpoint FlightInfo and
-    `--source-flight-sharded` replicates through the partitioned reader —
-    the CLI face of the sharded path (wiring level, like the test below;
-    the full sharded e2e lives in test_flight_sharded.py)."""
+    """`serve --shards N` serves multi-endpoint FlightInfo, and the
+    `--source-flight` branch replicates from it with no reader flag, one
+    partition per endpoint (wiring level, like the test below; the full
+    e2e lives in test_flight_sharded.py). The removed reader switch is
+    refused as an unknown flag."""
     import json as _json
 
     import pyarrow.flight as flight
@@ -330,8 +331,8 @@ def test_serve_sharded_flags_wire_through(spark, tmp_path):
     )
     handle = None
     try:
-        # the --source-flight-sharded branch: opts = {"sharded": "true"}
-        handle = ingest_from_flight(down, "clicks", loc, sharded="true")
+        # the --source-flight branch of cmd_serve
+        handle = ingest_from_flight(down, "clicks", loc)
         handle.query.processAllAvailable()
         assert sorted(r.n for r in down.fetch("clicks", -1).collect()) == list(range(8))
     finally:
@@ -340,6 +341,8 @@ def test_serve_sharded_flags_wire_through(spark, tmp_path):
         down.stop()
         server.shutdown()
         up.stop()
+    with pytest.raises(SystemExit):
+        main(["serve", "--source-flight", loc, "--source-flight-sharded"])
 
 
 def test_serve_source_flight_replicates_upstream(spark, tmp_path):

@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import json
+import types
+import uuid
 
+import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 from roar_spark.config import EngineConfig
 from roar_spark.sources.files import read_envelope_batch, write_envelope_file
@@ -280,10 +284,66 @@ def test_flight_streaming_source_engine_to_engine(served_engine, spark, tmp_path
         engine_b.stop()
 
 
-def _snap(lo: int, hi: int):
-    import pyarrow as pa
+class _FakeStore:
+    """A drop-oldest buffer of unique ints with what the Flight server reads
+    of a store: gen, version and snapshot_arrow's (first, table)."""
 
-    return pa.table({"n": pa.array(list(range(lo, hi)), pa.int64())})
+    def __init__(self) -> None:
+        self.gen = uuid.uuid4().hex
+        self.version = 0
+        self.records_dropped = 0
+        self.rows: list[int] = []
+
+    def evict(self, n: int) -> None:
+        n = min(n, len(self.rows))
+        self.rows = self.rows[n:]
+        self.records_dropped += n
+        self.version += 1
+
+    def append(self, values) -> None:
+        self.rows = self.rows + list(values)
+        self.version += 1
+
+    def snapshot_arrow(self):
+        return self.records_dropped, pa.table({"n": pa.array(self.rows, pa.int64())})
+
+
+class _FakeEngine:
+    """The engine surface RoarFlightServer uses, over one topic "t"."""
+
+    def __init__(self) -> None:
+        self.store = _FakeStore()
+
+    def touch(self, topic: str):
+        if topic != "t":
+            raise KeyError(topic)
+        return types.SimpleNamespace(store=self.store)
+
+    def list_streams(self) -> list[str]:
+        return ["t"]
+
+    def get_schema(self, topic: str):
+        return _N_SCHEMA
+
+
+_N_SCHEMA = StructType([StructField("n", LongType(), True)])
+
+
+@pytest.fixture(scope="module")
+def fake_servers():
+    """Flight servers over one fake engine: ``{shards: location}`` for 1
+    and 3 endpoints. Tests swap ``engine.store`` to start a fresh buffer."""
+    engine = _FakeEngine()
+    servers = {n: serve_in_thread(engine, shards=n) for n in (1, 3)}
+    yield engine, {n: f"grpc://localhost:{srv.port}" for n, srv in servers.items()}
+    for srv in servers.values():
+        srv.shutdown()
+
+
+def _reader(location: str, **opts):
+    from roar_spark.sources.flight import FlightShardedStreamReader
+
+    return FlightShardedStreamReader(_N_SCHEMA, {"location": location, "topic": "t", **opts})
 
 
 def _vals(batches):
@@ -294,140 +354,121 @@ def _vals(batches):
     return out
 
 
-def test_flight_source_offset_survives_masked_eviction(monkeypatch):
-    """Drop-oldest eviction MASKED by concurrent appends (count grows while
-    positions shift) must trigger the head-fingerprint reset and re-deliver
-    — the bare shrink check silently skipped the rows that moved into the
-    evicted positions (r8 review)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    import roar_spark.sources.flight as fl
-
-    schema = StructType([StructField("n", LongType(), True)])
-    reader = fl.FlightSimpleStreamReader(schema, {"location": "x", "topic": "t"})
-
-    snaps = {"cur": _snap(0, 10)}
-    monkeypatch.setattr(fl, "_fetch_snapshot", lambda loc, top: snaps["cur"])
-
-    rows1, off1 = reader.read(reader.initialOffset())
-    assert _vals(rows1) == list(range(10))
-    assert off1["rows"] == 10 and off1["head"] is not None
-
-    # evict rows 0-4, append 10-19: num_rows=15 >= mark=10, head CHANGED
-    snaps["cur"] = _snap(5, 20)
-    rows2, off2 = reader.read(off1)
-    # reset → whole snapshot re-delivered: rows 10-14 are NOT skipped
-    assert _vals(rows2) == list(range(5, 20))
-    assert off2 == {"rows": 15, "head": fl._head_fingerprint(snaps["cur"])}
-
-    # steady state (no eviction): pure positional delta, no re-delivery
-    snaps["cur"] = _snap(5, 25)
-    rows3, off3 = reader.read(off2)
-    assert _vals(rows3) == list(range(20, 25))
-    assert off3["rows"] == 20  # 15 old positions + 5 new
+def _read_range(reader, start, end):
+    return [n for part in reader.partitions(start, end) for n in _vals(reader.read(part))]
 
 
-def test_flight_source_replays_reset_batches(monkeypatch):
-    """Checkpoint replay of a post-eviction reset batch must re-deliver
-    snapshot[0:end.rows], not the inverted/shifted positional slice that
-    returned empty and lost the batch (r8 review)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    import roar_spark.sources.flight as fl
-
-    schema = StructType([StructField("n", LongType(), True)])
-    reader = fl.FlightSimpleStreamReader(schema, {"location": "x", "topic": "t"})
-    table = _snap(40, 100)  # 60 rows after a wipe
-    monkeypatch.setattr(fl, "_fetch_snapshot", lambda loc, top: table)
-    h_now = fl._head_fingerprint(table)
-
-    # inverted range (100 → 60 after total eviction): replay [0:60]
-    replay = _vals(
-        reader.readBetweenOffsets(
-            {"rows": 100, "head": "stale"}, {"rows": 60, "head": h_now}
-        )
-    )
-    assert replay == list(range(40, 100))
-
-    # masked-eviction reset (range grew but head changed): replay [0:end]
-    replay2 = _vals(
-        reader.readBetweenOffsets(
-            {"rows": 10, "head": "stale"}, {"rows": 15, "head": h_now}
-        )
-    )
-    assert replay2 == list(range(40, 55))
-
-    # non-reset replay: plain positional slice
-    replay3 = _vals(
-        reader.readBetweenOffsets(
-            {"rows": 10, "head": h_now}, {"rows": 15, "head": h_now}
-        )
-    )
-    assert replay3 == list(range(50, 55))
-
-    # eviction BETWEEN the live read and the replay: the checkpointed end
-    # head no longer matches the new snapshot's head, so positions are
-    # untrustworthy — a positional slice would silently substitute
-    # DIFFERENT rows. Must fall back to [0:end.rows] (r8 advice).
-    h_stale = "batch-time-head-now-evicted"
-    replay4 = _vals(
-        reader.readBetweenOffsets(
-            {"rows": 10, "head": h_stale}, {"rows": 15, "head": h_stale}
-        )
-    )
-    assert replay4 == list(range(40, 55))
+def _drain(reader, start):
+    """Plan and read batches the way the micro-batch engine does until
+    latestOffset stops advancing; returns (values delivered, last end)."""
+    out = []
+    while True:
+        end = reader.latestOffset()
+        if end == start:
+            return out, start
+        out += _read_range(reader, start, end)
+        reader.commit(end)
+        start = end
 
 
-def test_flight_source_at_least_once_property(monkeypatch):
-    """Property: across ANY interleaving of front-evictions and appends
-    between polls (the drop-oldest buffer's full behavior space), every
-    row present in a polled snapshot has been delivered at least once by
-    the end of that poll round — the at-least-once contract the module
-    doc promises. Rows are unique monotone ints, so set containment is
-    exact. Rate limiting is exercised by draining each poll round the way
-    the engine does (repeat read() until the offset stops advancing)."""
+def test_flight_source_offset_survives_masked_eviction(fake_servers):
+    """Drop-oldest eviction MASKED by concurrent appends (the row count grows
+    while positions shift) delivers exactly the appended rows, on 1 and 3
+    endpoints: offsets are absolute, so neither a re-delivery nor a skip
+    can happen."""
+    engine, locations = fake_servers
+    for location in locations.values():
+        engine.store = store = _FakeStore()
+        reader = _reader(location)
+        store.append(range(10))
+        got, off1 = _drain(reader, reader.initialOffset())
+        assert sorted(got) == list(range(10))
+        assert off1 == {"gen": store.gen, "end": 10}
+
+        # evict rows 0-4, append 10-19: 15 rows held, head changed
+        store.evict(5)
+        store.append(range(10, 20))
+        got, off2 = _drain(reader, off1)
+        assert sorted(got) == list(range(10, 20))
+        assert off2 == {"gen": store.gen, "end": 20}
+
+        # steady state: the delta only
+        store.append(range(20, 25))
+        got, _ = _drain(reader, off2)
+        assert sorted(got) == list(range(20, 25))
+
+
+def test_flight_source_replays_reset_batches(fake_servers):
+    """Spark replays a checkpointed batch by planning its (start, end) again.
+    The replay serves the same rows while they are held, never a row
+    outside the range, only the held part after an eviction, and nothing
+    once the topic was re-created (a new gen: the rows are gone)."""
+    engine, locations = fake_servers
+    engine.store = store = _FakeStore()
+    reader = _reader(locations[3])
+    store.append(range(40, 100))  # offsets 0-59
+    start, end = {"gen": store.gen, "end": 10}, {"gen": store.gen, "end": 15}
+    assert sorted(_read_range(reader, start, end)) == list(range(50, 55))
+
+    store.append(range(100, 110))  # appends past the range change nothing
+    assert sorted(_read_range(reader, start, end)) == list(range(50, 55))
+
+    store.evict(12)  # offsets 10 and 11 are gone
+    assert sorted(_read_range(reader, start, end)) == list(range(52, 55))
+
+    # a batch that straddles a re-creation reads the new incarnation from
+    # its front; the old incarnation's range serves nothing
+    engine.store = fresh = _FakeStore()
+    fresh.append(range(200, 204))
+    assert _read_range(reader, start, end) == []
+    assert sorted(
+        _read_range(reader, end, {"gen": fresh.gen, "end": 4})
+    ) == list(range(200, 204))
+
+
+def test_flight_source_at_least_once_property(fake_servers):
+    """Property: across ANY interleaving of front-evictions, appends and
+    re-creations of the topic between polls (the drop-oldest buffer's full
+    behavior space), no row is delivered twice, and every row held at a
+    poll has been delivered by the end of that poll round — on 1 and 3
+    endpoints, with and without maxRowsPerBatch. Rows are unique monotone
+    ints, so set containment is exact. Each poll round is drained the way
+    the engine does (plan batches until the offset stops advancing)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    import roar_spark.sources.flight as fl
+    engine, locations = fake_servers
 
-    schema = StructType([StructField("n", LongType(), True)])
-
-    @settings(max_examples=60, deadline=None)
+    @settings(max_examples=40, deadline=None)
     @given(
         steps=st.lists(
-            st.tuples(st.integers(0, 8), st.integers(0, 8)), min_size=1, max_size=12
+            # (evict, append, re-create the topic first: 1 step in 5)
+            st.tuples(
+                st.integers(0, 8), st.integers(0, 8), st.integers(0, 4).map(lambda k: k == 0)
+            ),
+            min_size=1,
+            max_size=10,
         ),
         cap=st.one_of(st.none(), st.integers(1, 5)),
+        shards=st.sampled_from([1, 3]),
     )
-    def run(steps, cap):
-        opts = {"location": "x", "topic": "t"}
-        if cap is not None:
-            opts["maxrowsperbatch"] = str(cap)
-        reader = fl.FlightSimpleStreamReader(schema, opts)
-        buf: list[int] = []
+    def run(steps, cap, shards):
+        engine.store = _FakeStore()
+        opts = {} if cap is None else {"maxrowsperbatch": str(cap)}
+        reader = _reader(locations[shards], **opts)
+        delivered: list[int] = []
         next_id = 0
-        state = {"cur": _snap(0, 0)}
-        monkeypatch.setattr(fl, "_fetch_snapshot", lambda loc, top: state["cur"])
-        delivered: set[int] = set()
         offset = reader.initialOffset()
-        for evict, append in steps:
-            buf = buf[min(evict, len(buf)):]
-            buf = buf + list(range(next_id, next_id + append))
+        for evict, append, recreate in steps:
+            if recreate:  # a TTL expiry and re-creation
+                engine.store = _FakeStore()
+            engine.store.evict(evict)
+            engine.store.append(range(next_id, next_id + append))
             next_id += append
-            import pyarrow as pa
-
-            state["cur"] = pa.table({"n": pa.array(buf, pa.int64())})
-            # drain this poll round like the micro-batch engine: read until
-            # the offset stops advancing
-            while True:
-                rows, new_offset = reader.read(offset)
-                delivered.update(_vals(rows))
-                if new_offset == offset:
-                    break
-                offset = new_offset
-            assert delivered >= set(buf), (buf, sorted(delivered))
+            got, offset = _drain(reader, offset)
+            delivered += got
+            assert len(delivered) == len(set(delivered)), sorted(delivered)
+            assert set(delivered) >= set(engine.store.rows)
 
     run()
 
@@ -436,24 +477,31 @@ def test_flight_source_naive_timestamp_contract(monkeypatch):
     """TZ-LESS remote timestamps are interpreted per naiveTimestampTimezone
     (default UTC) — an explicit, configurable contract where a bare arrow
     cast would silently reinterpret as UTC and a per-row conversion would
-    silently use the process-local zone (r8 review: 7-hour shifts on a
-    non-UTC box)."""
+    silently use the process-local zone (7-hour shifts on a non-UTC box)."""
     import datetime as dt
 
-    import pyarrow as pa
-    from pyspark.sql.types import StructField, StructType, TimestampType
+    from pyspark.sql.types import TimestampType
 
     import roar_spark.sources.flight as fl
 
     naive = dt.datetime(2026, 8, 15, 12, 0, 0)
     table = pa.table({"ts": pa.array([naive], pa.timestamp("us"))})
-    monkeypatch.setattr(fl, "_fetch_snapshot", lambda loc, top: table)
+
+    class _Client:
+        def do_get(self, ticket):
+            return types.SimpleNamespace(read_all=lambda: table)
+
+        def close(self):
+            pass
+
+    monkeypatch.setattr(flight, "connect", lambda loc: _Client())
     schema = StructType([StructField("ts", TimestampType(), True)])
 
     def instant(opts):
-        reader = fl.FlightSimpleStreamReader(schema, {"location": "x", "topic": "t", **opts})
-        batches, _ = reader.read(reader.initialOffset())
-        (batch,) = list(batches)
+        reader = fl.FlightShardedStreamReader(
+            schema, {"location": "x", "topic": "t", **opts}
+        )
+        (batch,) = list(reader.read(fl.FlightShardPartition("x", "t")))
         col = batch.column(0)
         assert col.type.tz is not None  # cast to the expected tz'd type
         return col[0].as_py().astimezone(dt.timezone.utc).replace(tzinfo=None)
@@ -463,3 +511,75 @@ def test_flight_source_naive_timestamp_contract(monkeypatch):
     # configured zone: naive 12:00 in LA = 19:00 UTC (PDT, Aug)
     shifted = instant({"naivetimestamptimezone": "America/Los_Angeles"})
     assert shifted == naive + dt.timedelta(hours=7)
+
+
+@pytest.mark.parametrize(
+    "ticket",
+    [
+        {"topic": "t", "shard": 5, "of": 2},
+        {"topic": "t", "shard": -1, "of": 2},
+        {"topic": "t", "shard": 0, "of": 0},
+        {"topic": "t", "shard": "0", "of": 2},
+        {"topic": "t", "shard": True, "of": 2},
+        {"topic": "t", "of": 1.5},
+        {"topic": "t", "gen": "g", "start": 5, "end": 3},
+        {"topic": "t", "gen": "g", "start": 1},
+        {"topic": "t", "start": 0, "end": 3},
+        {"topic": 3},
+        "{not json",
+    ],
+    ids=[
+        "shard-past-of", "shard-negative", "of-zero", "shard-string", "shard-bool",
+        "of-float", "start-past-end", "start-without-end", "range-without-gen",
+        "topic-not-string", "malformed-json",
+    ],
+)
+def test_doget_rejects_invalid_ticket(fake_servers, ticket):
+    """A DoGet ticket comes from outside the program: a JSON ticket with a
+    bad field fails with INVALID_ARGUMENT (ArrowInvalid on the client)
+    instead of serving an empty or an unfiltered shard."""
+    engine, locations = fake_servers
+    engine.store = _FakeStore()
+    engine.store.append(range(4))
+    raw = ticket if isinstance(ticket, str) else json.dumps(ticket)
+    client = flight.connect(locations[1])
+    try:
+        with pytest.raises(pa.ArrowInvalid):
+            client.do_get(flight.Ticket(raw.encode())).read_all()
+        ok = json.dumps({"topic": "t", "shard": 1, "of": 2}).encode()
+        assert client.do_get(flight.Ticket(ok)).read_all().column(0).to_pylist() == [1, 3]
+    finally:
+        client.close()
+
+
+def test_list_topics_closes_its_connection(monkeypatch):
+    """list_topics closes the client it opens, also when the RPC fails —
+    ``serve --source-flight`` calls it in a long-lived process."""
+    import roar_spark.streaming.flight_facade as ff
+
+    clients = []
+
+    class _Client:
+        def __init__(self, fail: bool) -> None:
+            self.fail, self.closed = fail, False
+
+        def list_flights(self):
+            if self.fail:
+                raise flight.FlightUnavailableError("down")
+            for name in (b"a", b"b"):
+                yield types.SimpleNamespace(descriptor=types.SimpleNamespace(path=[name]))
+
+        def close(self) -> None:
+            self.closed = True
+
+    failures = iter([False, True])
+
+    def connect(location):
+        clients.append(_Client(next(failures)))
+        return clients[-1]
+
+    monkeypatch.setattr(ff.flight, "connect", connect)
+    assert ff.list_topics("grpc://x") == ["a", "b"]
+    with pytest.raises(flight.FlightUnavailableError):
+        ff.list_topics("grpc://x")
+    assert [c.closed for c in clients] == [True, True]

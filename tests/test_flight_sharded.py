@@ -1,13 +1,13 @@
-"""Sharded Flight streaming source (the 1000-executor leg of the
-north-star design): multi-endpoint FlightInfo on the serving facade,
-partition-per-endpoint executor DoGets, hwm offset polling, stable
-content-hash sharding, and value parity with the simple reader."""
+"""Multi-endpoint serving and the Flight streaming source's offsets: the
+facade's per-shard FlightInfo and DoGets, the ``hwm`` action and ranged
+tickets on absolute row offsets, and partition-per-endpoint replication
+between engines over 1 and 3 endpoints."""
 
 from __future__ import annotations
 
 import json
+import tempfile
 
-import pyarrow as pa
 import pyarrow.flight as flight
 import pytest
 
@@ -22,8 +22,6 @@ from roar_spark.streaming.manager import StreamEngine
 
 
 def _feed(spark, engine, topic, lo, hi, kind="view"):
-    import tempfile
-
     with tempfile.TemporaryDirectory() as d:
         write_envelope_file(
             d,
@@ -52,10 +50,10 @@ def sharded_engine(spark):
     engine.stop()
 
 
-def test_sharded_info_endpoints_and_disjoint_union(sharded_engine):
+def test_sharded_info_endpoints_and_disjoint_union(sharded_engine, spark):
     """FlightInfo advertises one endpoint per shard; the shard DoGets are
     pairwise disjoint and union to exactly the snapshot."""
-    _, location = sharded_engine
+    engine, location = sharded_engine
     client = flight.connect(location)
     info = client.get_flight_info(flight.FlightDescriptor.for_path("clicks"))
     assert len(info.endpoints) == 3
@@ -68,11 +66,67 @@ def test_sharded_info_endpoints_and_disjoint_union(sharded_engine):
     flat = [o for rows in shard_rows for o in rows]
     assert sorted(flat) == list(range(40)), "shards must union to the snapshot"
     assert len(set(flat)) == len(flat), "shards must be disjoint"
-    # content sharding actually spreads (3 shards over 40 distinct rows)
-    assert sum(1 for rows in shard_rows if rows) >= 2
-    # and read_topic (the CLI/simple-client path) unions all endpoints
+    # offset sharding spreads evenly (3 shards over 40 rows)
+    assert sorted(len(rows) for rows in shard_rows) == [13, 13, 14]
+    # and read_topic (the CLI client path) unions all endpoints
     t = read_topic(location, "clicks")
     assert sorted(t.column("kafka_offset").to_pylist()) == list(range(40))
+
+
+def test_row_hashes_all_nested_fallback(sharded_engine, spark):
+    """A stream whose every column is nested shards like any other: a
+    row's shard is its offset modulo ``of``, so no row value is hashed.
+    The assignment is position-independent (a ranged read from offset 1
+    keeps each row's shard) and equal values at different offsets may
+    land on different shards."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    engine, location = sharded_engine
+    client = flight.connect(location)
+    nested = StructType([StructField("xs", ArrayType(LongType()), True)])
+    engine.register_converter(
+        "nested",
+        lambda env, s: env.select(
+            F.from_json(F.col("value").cast("string"), s).alias("r")
+        ).select("r.*"),
+        nested,
+    )
+    engine.register_stream("nested", [])
+    values = [[1, 2], [3], [1, 2], [], [4, 5, 6]]
+    with tempfile.TemporaryDirectory() as d:
+        write_envelope_file(
+            d,
+            [
+                {"key": "k", "value": json.dumps({"xs": xs}),
+                 "timestamp": "2026-08-13T10:00:00Z", "offset": i, "partition": 0}
+                for i, xs in enumerate(values)
+            ],
+        )
+        engine.append_batch("nested", read_envelope_batch(spark, d))
+    info = client.get_flight_info(flight.FlightDescriptor.for_path("nested"))
+    assert len(info.endpoints) == 3
+    parts = [
+        client.do_get(ep.ticket).read_all().column("xs").to_pylist()
+        for ep in info.endpoints
+    ]
+    assert parts == [[[1, 2], []], [[3], [4, 5, 6]], [[1, 2]]]  # offset % 3
+    assert sorted(map(tuple, sum(parts, []))) == sorted(map(tuple, values))
+
+    gen = engine._handle("nested").store.gen
+    tail = [
+        client.do_get(
+            flight.Ticket(
+                json.dumps(
+                    {"topic": "nested", "shard": s, "of": 3,
+                     "start": 1, "end": len(values), "gen": gen}
+                ).encode()
+            )
+        ).read_all().column("xs").to_pylist()
+        for s in range(3)
+    ]
+    # dropping offset 0 removes it from shard 0 alone; every other row stays put
+    assert tail == [parts[0][1:], parts[1], parts[2]]
 
 
 def test_shard_assignment_stable_under_eviction(sharded_engine, spark):
@@ -104,51 +158,50 @@ def test_shard_assignment_stable_under_eviction(sharded_engine, spark):
     assert all(before[o] == after[o] for o in survivors)
 
 
-def test_hwm_action_and_ranged_ticket(sharded_engine):
-    """hwm returns the global {rows, head}; a ranged ticket serves only the
-    delta, and a stale start_head resets the range to the front."""
-    _, location = sharded_engine
+def test_hwm_action_and_ranged_ticket(sharded_engine, spark):
+    """hwm returns the store's {gen, first, end}; a ranged ticket serves the
+    rows of [start, end) still held, split by shard, and nothing for a
+    stale gen. After an eviction the range is clamped to the first row."""
+    engine, location = sharded_engine
     client = flight.connect(location)
-    hwm = json.loads(
-        next(iter(client.do_action(flight.Action("hwm", b"clicks")))).body.to_pybytes()
-    )
-    assert hwm["rows"] == 40 and hwm["head"]
 
-    def ranged(start, end, start_head, shard=None, of=None):
-        spec = {"topic": "clicks", "start": start, "end": end, "start_head": start_head}
+    def hwm():
+        return json.loads(
+            next(iter(client.do_action(flight.Action("hwm", b"clicks")))).body.to_pybytes()
+        )
+
+    def ranged(start, end, gen, shard=None, of=None):
+        spec = {"topic": "clicks", "start": start, "end": end, "gen": gen}
         if of:
             spec.update({"shard": shard, "of": of})
         t = client.do_get(flight.Ticket(json.dumps(spec).encode())).read_all()
         return t.column("kafka_offset").to_pylist()
 
-    # valid head → positional delta
-    assert ranged(30, 40, hwm["head"]) == list(range(30, 40))
-    # stale head → reset to the front (at-least-once re-delivery)
-    assert ranged(30, 40, "stale") == list(range(40))
-    # sharded delta: union of the 3 shards == the delta
-    got = sorted(
-        o for s in range(3) for o in ranged(30, 40, hwm["head"], shard=s, of=3)
-    )
-    assert got == list(range(30, 40))
+    h = hwm()
+    assert h == {"gen": engine._handle("clicks").store.gen, "first": 0, "end": 40}
+    assert ranged(30, 40, h["gen"]) == list(range(30, 40))
+    assert ranged(30, 99, h["gen"]) == list(range(30, 40))  # clamped to the end
+    assert ranged(30, 40, "stale") == []  # another incarnation's rows are gone
+    # sharded delta: the 3 shards partition the range
+    shards = [ranged(30, 40, h["gen"], shard=s, of=3) for s in range(3)]
+    assert sorted(sum(shards, [])) == list(range(30, 40))
+    assert shards[0] == [30, 33, 36, 39]  # shard = offset % of
 
-
-def test_simple_reader_refuses_sharded_server(sharded_engine):
-    """The driver-prefetch reader's positional offset model is invalid
-    against a multi-endpoint server (appends interleave mid-snapshot) —
-    it must raise with the fix, not silently drop rows."""
-    _, location = sharded_engine
-    from roar_spark.sources.flight import _fetch_snapshot
-
-    with pytest.raises(ValueError, match="sharded"):
-        _fetch_snapshot(location, "clicks")
+    _feed(spark, engine, "clicks", 40, 50, kind="mid")
+    store = engine._handle("clicks").store
+    store._max_bytes = store.current_bytes  # the next append evicts
+    _feed(spark, engine, "clicks", 50, 60, kind="late")
+    h2 = hwm()
+    assert h2["gen"] == h["gen"] and h2["first"] == store.records_dropped > 0
+    assert h2["end"] == 60
+    assert ranged(0, 60, h["gen"]) == list(range(h2["first"], 60))
 
 
 def test_sharded_source_engine_to_engine(sharded_engine, spark, tmp_path):
-    """North-star e2e at ≥3 endpoints: engine B replicates A's served
-    stream through the PARTITIONED reader (executors DoGet their own
-    shards), with exactly-once steady-state delivery across incremental
-    appends — value parity with what the simple reader delivers against
-    an unsharded server (test_flight.py's e2e)."""
+    """North-star e2e at 3 endpoints: engine B replicates A's served stream
+    with one partition per endpoint (executors DoGet their own shards),
+    exactly once across incremental appends — the same rows the 1-endpoint
+    e2e in test_flight.py delivers."""
     from roar_spark.sources.flight import ingest_from_flight
 
     engine_a, location = sharded_engine
@@ -156,9 +209,7 @@ def test_sharded_source_engine_to_engine(sharded_engine, spark, tmp_path):
         spark,
         EngineConfig(flush_interval_seconds=1, checkpoint_path=str(tmp_path / "ck")),
     )
-    handle = ingest_from_flight(
-        engine_b, "replica", location, remote_topic="clicks", sharded="true"
-    )
+    handle = ingest_from_flight(engine_b, "replica", location, remote_topic="clicks")
     try:
         engine_b.process_all("replica")
         rows = engine_b.fetch("replica", -1).collect()
@@ -179,9 +230,11 @@ def test_sharded_source_engine_to_engine(sharded_engine, spark, tmp_path):
 
 
 def test_sharded_reader_offsets_and_partitions(monkeypatch):
-    """Driver-side unit pins: latestOffset caps via maxRowsPerBatch only
-    within one head frame; partitions() embeds the range, resets on head
-    change, and returns [] for an empty range."""
+    """Driver-side unit pins: latestOffset caps via maxRowsPerBatch from the
+    last planned end (or from the first held row, if that is later), and
+    from the front of a new incarnation; partitions() embeds the range and
+    gen in every endpoint's ticket, reads a new gen from its front, and
+    returns [] for an empty range."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     import roar_spark.sources.flight as fl
@@ -190,17 +243,18 @@ def test_sharded_reader_offsets_and_partitions(monkeypatch):
     reader = fl.FlightShardedStreamReader(
         schema, {"location": "grpc://x", "topic": "t", "maxrowsperbatch": "10"}
     )
-    hwm = {"rows": 0, "head": None}
+    hwm = {}
     monkeypatch.setattr(reader, "_hwm", lambda: dict(hwm))
 
-    assert reader.initialOffset() == {"rows": 0, "head": None}
-    hwm = {"rows": 25, "head": "h1"}
-    # first observation after (re)start is uncapped by design
-    assert reader.latestOffset() == {"rows": 25, "head": "h1"}
-    hwm = {"rows": 60, "head": "h1"}
-    assert reader.latestOffset() == {"rows": 35, "head": "h1"}  # capped
-    hwm = {"rows": 80, "head": "h2"}  # head changed: no shared frame → uncapped
-    assert reader.latestOffset() == {"rows": 80, "head": "h2"}
+    assert reader.initialOffset() == {"gen": None, "end": 0}
+    hwm = {"gen": "g1", "first": 0, "end": 25}
+    assert reader.latestOffset() == {"gen": "g1", "end": 10}  # capped from the start
+    hwm = {"gen": "g1", "first": 0, "end": 60}
+    assert reader.latestOffset() == {"gen": "g1", "end": 20}
+    hwm = {"gen": "g1", "first": 45, "end": 60}  # 20..44 evicted unread
+    assert reader.latestOffset() == {"gen": "g1", "end": 55}
+    hwm = {"gen": "g2", "first": 0, "end": 80}  # re-created: from its front
+    assert reader.latestOffset() == {"gen": "g2", "end": 10}
 
     class _EP:
         def __init__(self, ticket, locs):
@@ -220,23 +274,22 @@ def test_sharded_reader_offsets_and_partitions(monkeypatch):
         def close(self):
             pass
 
-    import pyarrow.flight as pf
+    monkeypatch.setattr(flight, "connect", lambda loc: _Client())
 
-    monkeypatch.setattr(pf, "connect", lambda loc: _Client())
-
-    parts = reader.partitions({"rows": 10, "head": "a"}, {"rows": 30, "head": "a"})
-    assert len(parts) == 2
+    parts = reader.partitions({"gen": "a", "end": 10}, {"gen": "a", "end": 30})
     specs = [json.loads(p.ticket) for p in parts]
-    assert all(s["start"] == 10 and s["end"] == 30 and s["start_head"] == "a" for s in specs)
-    assert {s["shard"] for s in specs} == {0, 1}
+    assert specs == [
+        {"topic": "t", "shard": i, "of": 2, "gen": "a", "start": 10, "end": 30}
+        for i in range(2)
+    ]
     assert all(p.location == "grpc://x" for p in parts)  # no ep locations → source's
 
-    # head change → reset to the front
-    parts = reader.partitions({"rows": 10, "head": "a"}, {"rows": 8, "head": "b"})
+    # gen change → the new incarnation from its front
+    parts = reader.partitions({"gen": "a", "end": 10}, {"gen": "b", "end": 8})
     assert all(json.loads(p.ticket)["start"] == 0 for p in parts)
 
     # empty range → no partitions
-    assert reader.partitions({"rows": 30, "head": "a"}, {"rows": 30, "head": "a"}) == []
+    assert reader.partitions({"gen": "a", "end": 30}, {"gen": "a", "end": 30}) == []
 
 
 def test_snapshot_cache_per_store_version(spark):
@@ -336,41 +389,6 @@ def test_snapshot_cache_prunes_dead_topics(spark):
     engine.stop()
 
 
-def test_incremental_row_hash_carry_forward(spark):
-    """Steady-state appends reuse the previous snapshot's row hashes as a
-    prefix (head row unchanged ⇒ prefix property) — the carried-forward
-    vector must equal a from-scratch hash of the new snapshot, and shard
-    DoGets must return identical rows either way (r9 review)."""
-    import numpy as np
-
-    engine = StreamEngine(spark, EngineConfig())
-    engine.register_stream("t", [json.dumps({"n": 1, "kind": "view"})])
-    _feed(spark, engine, "t", 0, 12)
-    server = RoarFlightServer(engine, shards=2)
-    # populate hashes for version 1
-    entry1 = server._snapshot_entry("t")
-    with entry1["hash_lock"]:
-        entry1["hashes"] = server._row_hashes(entry1["table"])
-    _feed(spark, engine, "t", 12, 20)
-    entry2 = server._snapshot_entry("t")
-    assert entry2 is not entry1
-    assert "prev_hashes" in entry2, "append with unchanged head must carry forward"
-    # force the lazy computation exactly as do_get does
-    base = entry2.pop("prev_hashes")
-    delta = entry2["table"].slice(len(base))
-    carried = np.concatenate([base, server._row_hashes(delta)])
-    scratch = server._row_hashes(entry2["table"])
-    assert list(carried) == list(scratch)
-    # eviction (head change) must NOT carry forward
-    entry2["hashes"] = carried
-    handle = engine._handle("t")
-    handle.store._max_bytes = handle.store.current_bytes  # next append evicts
-    _feed(spark, engine, "t", 20, 24)
-    entry3 = server._snapshot_entry("t")
-    assert "prev_hashes" not in entry3
-    engine.stop()
-
-
 def test_fetch_topic_limit_is_head_of_buffer_on_sharded(sharded_engine):
     """A limited fetch against a sharded server must return the OLDEST
     buffered rows (reference client semantics, cmd/client.go:193), not a
@@ -385,22 +403,10 @@ def test_fetch_topic_limit_is_head_of_buffer_on_sharded(sharded_engine):
     assert sorted(t.column("kafka_offset").to_pylist()) == list(range(40))
 
 
-def test_row_hashes_all_nested_fallback():
-    """A schema with only nested columns falls back to the per-row JSON
-    hash — still deterministic and value-stable."""
-    t = pa.table({"xs": pa.array([[1, 2], [3], [1, 2]], pa.list_(pa.int64()))})
-    a = RoarFlightServer._row_hashes(t) % 4
-    b = RoarFlightServer._row_hashes(t.slice(1)) % 4
-    assert list(a[1:]) == list(b)  # position-independent
-    assert a[0] == a[2]  # equal values share a shard
-
-
 def _feed_const(spark, engine, topic, rows, payload="dup"):
     """Append `rows` value-IDENTICAL envelope rows (same key, payload,
     timestamp, offset, partition) — builds buffers whose head row compares
     equal by VALUE across evictions."""
-    import tempfile
-
     with tempfile.TemporaryDirectory() as d:
         write_envelope_file(
             d,
@@ -418,83 +424,127 @@ def _feed_const(spark, engine, topic, rows, payload="dup"):
         engine.append_batch(topic, read_envelope_batch(spark, d))
 
 
-def test_eviction_with_value_equal_head_refuses_hash_carry_forward(spark):
-    """r9 ADVICE: drop-oldest eviction landing on a head row whose values
-    equal the old head's (duplicate rows) passes the fingerprint check —
-    the carry-forward must be refused via the store's eviction epoch, or
-    the carried hash vector is silently misaligned with the table."""
-    engine = StreamEngine(spark, EngineConfig())
-    engine.register_stream("d", [json.dumps({"n": 0, "kind": "dup"})])
-    _feed_const(spark, engine, "d", 5, payload="dup")
-    _feed_const(spark, engine, "d", 5, payload="dup")
-    server = RoarFlightServer(engine, shards=2)
-    entry1 = server._snapshot_entry("d")
-    assert entry1["table"].num_rows == 10
-    with entry1["hash_lock"]:
-        entry1["hashes"] = server._row_hashes(entry1["table"])
-    # evict the FIRST batch; the new head row is value-identical to the old
-    handle = engine._handle("d")
-    handle.store._max_bytes = handle.store.current_bytes
-    _feed_const(spark, engine, "d", 5, payload="new")
-    entry2 = server._snapshot_entry("d")
-    assert entry2["head"] == entry1["head"], "scenario needs value-equal heads"
-    assert entry2["table"].num_rows == 10
-    assert entry2["epoch"] != entry1["epoch"]
-    assert "prev_hashes" not in entry2, (
-        "value-equal head after eviction must not carry hashes forward"
-    )
-
-
 def test_ranged_read_resets_on_eviction_epoch_despite_equal_head(spark):
-    """Same scenario at the DoGet surface: a ranged shard read whose start
-    offset predates an eviction must reset to the front (at-least-once)
-    even when the post-eviction head fingerprint matches by value."""
+    """A buffer of 10 value-equal rows loses its first 5 to eviction and
+    gains 5 new ones: the head row still equals the old head by value, and
+    the ranged read from the old end serves exactly the 5 new rows."""
     engine = StreamEngine(spark, EngineConfig())
     engine.register_stream("d", [json.dumps({"n": 0, "kind": "dup"})])
     _feed_const(spark, engine, "d", 5, payload="dup")
     _feed_const(spark, engine, "d", 5, payload="dup")
     server = serve_in_thread(engine, shards=1)
+    client = flight.connect(f"grpc://localhost:{server.port}")
     try:
-        location = f"grpc://localhost:{server.port}"
-        client = flight.connect(location)
-        hwm0 = json.loads(
-            list(client.do_action(flight.Action("hwm", b"d")))[0].body.to_pybytes()
-        )
-        assert hwm0["rows"] == 10 and "epoch" in hwm0
+
+        def hwm():
+            return json.loads(
+                list(client.do_action(flight.Action("hwm", b"d")))[0].body.to_pybytes()
+            )
+
+        hwm0 = hwm()
+        assert (hwm0["first"], hwm0["end"]) == (0, 10)
         handle = engine._handle("d")
         handle.store._max_bytes = handle.store.current_bytes
         _feed_const(spark, engine, "d", 5, payload="new")
-        hwm1 = json.loads(
-            list(client.do_action(flight.Action("hwm", b"d")))[0].body.to_pybytes()
-        )
-        assert hwm1["head"] == hwm0["head"] and hwm1["epoch"] != hwm0["epoch"]
-        spec = {
-            "topic": "d",
-            "shard": 0,
-            "of": 1,
-            "start": 5,
-            "start_head": hwm0["head"],
-            "start_epoch": hwm0["epoch"],
-            "end": hwm1["rows"],
-        }
+        hwm1 = hwm()
+        assert hwm1 == {"gen": hwm0["gen"], "first": 5, "end": 15}
+        spec = {"topic": "d", "gen": hwm0["gen"], "start": hwm0["end"], "end": hwm1["end"]}
         t = client.do_get(flight.Ticket(json.dumps(spec).encode())).read_all()
-        # reset to the front: all 10 retained rows re-delivered, not the
-        # positionally-shifted tail 5
-        assert t.num_rows == 10
-        client.close()
+        assert t.column("kind").to_pylist() == ["new"] * 5
     finally:
+        client.close()
         server.shutdown()
         engine.stop()
 
 
+def test_replica_delivers_rows_appended_behind_value_equal_head(spark, tmp_path):
+    """End to end through the source: a replica that read 10 value-equal
+    rows, after the upstream evicts 5 of them and appends 5 distinct ones,
+    receives exactly those 5 rows — the head row alone cannot tell the
+    buffer moved, the offsets can."""
+    from roar_spark.sources.flight import ingest_from_flight
+
+    engine_a = StreamEngine(spark, EngineConfig())
+    engine_a.register_stream("d", [json.dumps({"n": 0, "kind": "dup"})])
+    _feed_const(spark, engine_a, "d", 5, payload="dup")
+    _feed_const(spark, engine_a, "d", 5, payload="dup")
+    server = serve_in_thread(engine_a)
+    engine_b = StreamEngine(
+        spark,
+        EngineConfig(flush_interval_seconds=1, checkpoint_path=str(tmp_path / "ck")),
+    )
+    handle = None
+    try:
+        handle = ingest_from_flight(
+            engine_b, "replica", f"grpc://localhost:{server.port}", remote_topic="d"
+        )
+        engine_b.process_all("replica")
+        assert handle.records_total == 10
+        store = engine_a._handle("d").store
+        store._max_bytes = store.current_bytes  # the next append evicts 5
+        _feed_const(spark, engine_a, "d", 5, payload="new")
+        assert store.records_dropped == 5
+        engine_b.process_all("replica")
+        kinds = [r.kind for r in engine_b.fetch("replica", -1).collect()]
+        assert sorted(kinds) == ["dup"] * 10 + ["new"] * 5
+        assert handle.records_total == 15
+    finally:
+        if handle is not None and handle.query is not None:
+            handle.query.stop()
+        engine_b.stop()
+        server.shutdown()
+        engine_a.stop()
+
+
+def test_capped_replica_first_batch_after_restart_respects_cap(spark, tmp_path):
+    """maxRowsPerBatch holds on the first trigger after a restart too: a
+    capped replica restarted over a 30-row backlog on a 3-endpoint server
+    plans no batch above the cap, and delivers the backlog exactly once."""
+    from roar_spark.sources.flight import ingest_from_flight
+
+    engine_a = StreamEngine(spark, EngineConfig())
+    engine_a.register_stream("clicks", [json.dumps({"n": 1, "kind": "view"})])
+    _feed(spark, engine_a, "clicks", 0, 10)
+    server = serve_in_thread(engine_a, shards=3)
+    engine_b = StreamEngine(
+        spark,
+        EngineConfig(flush_interval_seconds=1, checkpoint_path=str(tmp_path / "ck")),
+    )
+    location = f"grpc://localhost:{server.port}"
+
+    def start():
+        return ingest_from_flight(
+            engine_b, "replica", location, remote_topic="clicks", maxRowsPerBatch="8"
+        )
+
+    handle = None
+    try:
+        handle = start()
+        engine_b.process_all("replica")
+        handle.query.stop()
+        _feed(spark, engine_a, "clicks", 10, 40, kind="backlog")
+        handle = start()  # the same checkpoint
+        engine_b.process_all("replica")
+        sizes = [
+            p["numInputRows"] for p in handle.query.recentProgress if p["numInputRows"]
+        ]
+        assert sizes and max(sizes) <= 8 and sum(sizes) == 30, sizes
+        rows = [r.kafka_offset for r in engine_b.fetch("replica", -1).collect()]
+        assert sorted(rows) == list(range(40))
+    finally:
+        if handle is not None and handle.query is not None:
+            handle.query.stop()
+        engine_b.stop()
+        server.shutdown()
+        engine_a.stop()
+
+
 def test_sharded_source_survives_reshard_across_restart(spark, tmp_path):
-    """r9 verdict item 3: the offset model claims per-endpoint
-    independence — prove at-least-once holds when the SHARD COUNT changes
-    between runs. Offsets are global (rows, head, epoch) and carry no
-    shard count; partitions() re-polls GetFlightInfo per batch, so a
-    restart against a re-sharded server must ship exactly the delta
-    (steady state) and never silently lose rows (union-over-shards of
-    h % of == i is everything for ANY of)."""
+    """Offsets are global ({gen, end}) and carry no shard count, and
+    partitions() re-polls GetFlightInfo per batch, so a restart against a
+    server re-sharded 3 -> 2 ships exactly the delta (the shards
+    ``offset % of == i`` partition a range for ANY of) — and after an
+    eviction, exactly the rows appended since, with no duplicates."""
     from roar_spark.sources.flight import ingest_from_flight
 
     engine_a = StreamEngine(spark, EngineConfig())
@@ -512,7 +562,6 @@ def test_sharded_source_survives_reshard_across_restart(spark, tmp_path):
             "replica",
             f"grpc://localhost:{server.port}",
             remote_topic="clicks",
-            sharded="true",
         )
         engine_b.process_all("replica")
         assert sorted(
@@ -529,7 +578,6 @@ def test_sharded_source_survives_reshard_across_restart(spark, tmp_path):
             "replica",
             f"grpc://localhost:{server.port}",
             remote_topic="clicks",
-            sharded="true",
         )
         engine_b.process_all("replica")
         rows = [r.kafka_offset for r in engine_b.fetch("replica", -1).collect()]
@@ -537,21 +585,14 @@ def test_sharded_source_survives_reshard_across_restart(spark, tmp_path):
         # zero loss AND zero duplicates across the reshard
         assert sorted(rows) == list(range(55))
         # now evict the server-side front and append: the next trigger
-        # resets to the front (at-least-once) — duplicates are expected
-        # and asserted, loss is not
+        # ships exactly the appended rows — no loss, no re-delivery
         store = engine_a._handle("clicks").store
         store._max_bytes = store.current_bytes
         _feed(spark, engine_a, "clicks", 55, 60, kind="tail")
         assert store.records_dropped > 0, "scenario needs a real eviction"
-        retained = {r.kafka_offset for r in engine_a.fetch("clicks", -1).collect()}
         engine_b.process_all("replica")
         rows = [r.kafka_offset for r in engine_b.fetch("replica", -1).collect()]
-        assert retained <= set(rows), "silent loss across eviction+reshard"
-        assert len(rows) > len(set(rows)), (
-            "the post-eviction reset re-delivers retained rows: duplicates "
-            "are the documented at-least-once cost, and their absence here "
-            "means the reset path did not engage"
-        )
+        assert sorted(rows) == list(range(60))
     finally:
         if handle is not None and handle.query is not None:
             handle.query.stop()

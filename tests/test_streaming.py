@@ -163,7 +163,8 @@ def test_memory_store_splits_micro_batch_into_record_batches(spark, tmp_path):
     assert _append_msgs(spark, tmp_path, engine, "rb1", 2500) == 2500
     store = engine._handle("rb1").store
     assert store.batch_count == 3 and store.batches_created == 3
-    table = store.snapshot_arrow()
+    first, table = store.snapshot_arrow()
+    assert first == 0
     assert [b.num_rows for b in table.to_batches()] == [1024, 1024, 452]
     assert table.column("kafka_offset").to_pylist() == list(range(2500))
 
@@ -180,12 +181,14 @@ def test_memory_store_evicts_whole_record_batches_oldest_first(spark, tmp_path):
     _append_msgs(spark, tmp_path, engine, "rb3", 250)  # batches 100, 100, 50
     _append_msgs(spark, tmp_path, engine, "rb3", 250, start_offset=250)
     store = engine._handle("rb3").store
-    offsets = store.snapshot_arrow().column("kafka_offset").to_pylist()
+    first, table = store.snapshot_arrow()
+    offsets = table.column("kafka_offset").to_pylist()
     assert offsets == list(range(500 - len(offsets), 500))
+    assert first == offsets[0]  # a row's served offset is its append index
     assert 500 - len(offsets) in {100, 200, 250, 350, 450}  # batch boundaries
     assert store.records_dropped == 500 - len(offsets) > 0
     assert store.current_bytes <= cap
-    assert all(b.num_rows <= 100 for b in store.snapshot_arrow().to_batches())
+    assert all(b.num_rows <= 100 for b in table.to_batches())
 
 
 def test_ttl_expiry_and_read_refresh(spark, tmp_path):

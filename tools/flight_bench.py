@@ -1,10 +1,11 @@
-"""Sharded vs simple Flight-source replication throughput (SCALE.md).
+"""Flight-source replication throughput on 1 and N endpoints (SCALE.md).
 
-Upstream engine serves a 1M-row topic over TWO facades on the same store:
-an unsharded one (the simple reader's surface) and an N-shard one (the
-partitioned reader's surface). Downstream engines replicate through each
-source into a ParquetStore (executor writes — no driver collect on the
-sink side), interleaved best-of-K so box noise can't pick the winner.
+Upstream engine serves a 1M-row topic over facades on the same store: a
+1-endpoint one (reference parity) and, for ``shards > 1``, an N-endpoint
+one. Downstream engines replicate through the ``roar_flight`` source
+(one partition per endpoint) into a ParquetStore (executor writes — no
+driver collect on the sink side), interleaved best-of-K so box noise
+can't pick the winner.
 
 Usage: python tools/flight_bench.py [rows] [shards] [reps]
 """
@@ -68,12 +69,9 @@ def main() -> None:
     want_n = snap.agg(F.sum("n")).first()[0]
     print(f"upstream ready: {rows} rows, sum(n)={want_n}", flush=True)
 
-    simple_srv = serve_in_thread(up, shards=1)
-    sharded_srv = serve_in_thread(up, shards=shards)
-    loc_simple = f"grpc://localhost:{simple_srv.port}"
-    loc_sharded = f"grpc://localhost:{sharded_srv.port}"
+    servers = {n: serve_in_thread(up, shards=n) for n in sorted({1, shards})}
 
-    def replicate(location: str, **opts) -> float:
+    def replicate(location: str) -> float:
         with tempfile.TemporaryDirectory() as tdir:
             down = StreamEngine(
                 spark,
@@ -84,7 +82,7 @@ def main() -> None:
                 ),
                 store_base=f"{tdir}/store",  # executor parquet writes
             )
-            h = ingest_from_flight(down, "replica", location, remote_topic="big", **opts)
+            h = ingest_from_flight(down, "replica", location, remote_topic="big")
             t0 = time.time()
             h.query.processAllAvailable()
             dt = time.time() - t0
@@ -94,13 +92,13 @@ def main() -> None:
             down.stop()
             return dt
 
-    results: dict[str, list[float]] = {"simple": [], f"sharded x{shards}": []}
-    for rep in range(reps):  # interleaved A/B (bench methodology memory)
-        results["simple"].append(replicate(loc_simple))
-        results[f"sharded x{shards}"].append(replicate(loc_sharded, sharded="true"))
+    results: dict[str, list[float]] = {f"{n} endpoint(s)": [] for n in servers}
+    for rep in range(reps):  # interleaved, so a slow spell hits every side
+        for n, srv in servers.items():
+            results[f"{n} endpoint(s)"].append(replicate(f"grpc://localhost:{srv.port}"))
         print(
-            f"rep {rep}: simple {results['simple'][-1]:.1f}s, "
-            f"sharded {results[f'sharded x{shards}'][-1]:.1f}s",
+            f"rep {rep}: "
+            + ", ".join(f"{name} {ts[-1]:.1f}s" for name, ts in results.items()),
             flush=True,
         )
     for name, ts in results.items():
@@ -110,8 +108,8 @@ def main() -> None:
             f"all {[round(t, 1) for t in ts]}",
             flush=True,
         )
-    simple_srv.shutdown()
-    sharded_srv.shutdown()
+    for srv in servers.values():
+        srv.shutdown()
     up.stop()
 
 
