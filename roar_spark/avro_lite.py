@@ -19,12 +19,13 @@ missing leg from public specifications only:
   (missing reader fields filled from defaults, unknown writer fields
   dropped, int→long / float→double promotions) so topics can evolve.
 
-Like ``vendor/google/protobuf`` (the proto3 shim), this is deliberately
-from scratch: the container ships neither the spark-avro connector jar
-nor a Python avro package. The decoder is plain Python driven row-at-a-
-time INSIDE an Arrow-batched ``mapInPandas`` kernel (streaming/avro.py) —
-the same slow-lane posture as every payload-decode stage here: bounded by
-source ingest rate, never on a relational hot path.
+Like ``proto_lite`` (the proto3 codec), this is deliberately from
+scratch: Spark's distribution leaves out the spark-avro connector jar,
+and no Python avro package is required. The decoder is plain Python
+driven row-at-a-time INSIDE an Arrow-batched ``mapInPandas`` kernel
+(streaming/avro.py) — the same slow-lane posture as every payload-decode
+stage here: bounded by source ingest rate, never on a relational hot
+path.
 """
 
 from __future__ import annotations

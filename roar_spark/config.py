@@ -28,7 +28,7 @@ fixed per-trigger admission bound (sources/kafka.py,
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -51,6 +51,4 @@ class EngineConfig:
     # quirk); default False = exact reference behavior
     infer_nested: bool = False  # True → real Struct/Array types instead of
     # the reference's stringified nested values (SURVEY.md §1.3)
-    persist_path: str | None = None  # sink target (corrected A30)
     checkpoint_path: str | None = None
-    extra: dict = field(default_factory=dict)

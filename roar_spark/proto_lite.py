@@ -21,11 +21,8 @@ Built from public specifications only:
   0x00 form);
 - proto message → Spark StructType mapping.
 
-Deliberately independent of ``vendor/google/protobuf`` (the TWS shim):
-that shim's scope is the generated-code API StateMessage_pb2 needs and
-extending it for payload decode would widen a surface the state server
-depends on. This module is schema-driven (no generated classes), the
-exact analog of ``avro_lite``.
+The repo's one proto3 codec. It is schema-driven (no generated classes
+and no protobuf runtime), the exact analog of ``avro_lite``.
 """
 
 from __future__ import annotations

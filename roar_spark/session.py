@@ -73,32 +73,6 @@ def _prepend_worker_path(path: str) -> None:
         )
 
 
-def _ensure_protobuf_shim() -> None:
-    """Make `google.protobuf` importable when no real protobuf exists, via
-    the vendored pure-Python runtime shim (roar_spark/vendor/README.md).
-
-    Spark 4's transformWithStateInPandas Python worker speaks the TWS
-    state-server protocol through the generated StateMessage_pb2 module,
-    whose only runtime dependency is this API. Prepending (a) sys.path for
-    this process and (b) $PYTHONPATH for the JVM's Python workers activates
-    the shim everywhere the protocol runs. A real protobuf install always
-    wins — we only add the path when the import fails."""
-    import importlib.util
-    import sys
-
-    try:
-        # raises ModuleNotFoundError when the parent `google` namespace
-        # itself is absent (find_spec imports the parent first)
-        if importlib.util.find_spec("google.protobuf") is not None:
-            return
-    except ModuleNotFoundError:
-        pass
-    vendor = os.path.join(_PACKAGE_DIR, "vendor")
-    if vendor not in sys.path:
-        sys.path.insert(0, vendor)
-    _prepend_worker_path(vendor)
-
-
 DEFAULT_APP_NAME = "roar_spark"
 
 
@@ -116,7 +90,6 @@ def get_spark(
     # before the JVM spawns: workers inherit env. The package root makes
     # the worker daemon importable from any working directory — without it
     # the workers found roar_spark only through the launching process's cwd.
-    _ensure_protobuf_shim()
     _prepend_worker_path(os.path.dirname(_PACKAGE_DIR))
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -219,10 +192,9 @@ def tuned_session(spark: SparkSession, expected_rows: int) -> SparkSession:
     DataFrame executes under the conf of the session it was built from,
     the width travels WITH the operator's plan: it applies at the
     caller's ``collect()`` no matter what is built or run in between, and
-    the caller's session is never mutated — neither leak direction of the
-    r5 session-global tuning exists (small-after-big inheriting a wide
-    conf, or big-build/small-tune/big-execute re-spilling at base width;
-    VERDICT r5 task 2 + ADVICE).
+    the caller's session is never mutated — neither leak direction of a
+    session-global tuning exists (small-after-big inheriting a wide
+    conf, or big-build/small-tune/big-execute re-spilling at base width).
 
     The clone re-applies the parent's explicitly-set SQL confs so an
     embedding host's runtime settings (timezone, ANSI toggles,
@@ -230,7 +202,7 @@ def tuned_session(spark: SparkSession, expected_rows: int) -> SparkSession:
     raw conf map, NOT the ``SET`` command: SET redacts values matching
     ``spark.redaction.regex``, and copying the literal ``*(redacted)``
     placeholder into the clone would break secret-bearing confs exactly
-    and only at the large scales where cloning engages (r6 review).
+    and only at the large scales where cloning engages.
     Static/immutable entries are skipped."""
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     target = shuffle_width_for(base, expected_rows)
@@ -265,7 +237,7 @@ def _session_confs(spark: SparkSession) -> list[tuple[str, str]]:
     cannot be used to replicate secret-bearing confs onto a clone. Falls
     back to the (redacting) SET enumeration if the internal API moves —
     degraded for secrets, but never silently empty, and the degradation is
-    announced once per process (r6 review: a secret-bearing conf copied as
+    announced once per process (a secret-bearing conf copied as
     the literal ``*(redacted)`` placeholder would otherwise break the
     tuned clone invisibly, exactly at the large scales where cloning
     engages)."""

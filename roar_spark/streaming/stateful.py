@@ -20,7 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 __all__ = [
     "windowed_counts",
@@ -30,7 +29,6 @@ __all__ = [
     "running_totals",
     "stream_stream_join",
     "recent_buffer",
-    "recent_buffer_tws",
     "chained_windowed_counts",
     "merge_evict",
 ]
@@ -194,12 +192,8 @@ def recent_buffer(
     the reference's byte-capped ingest buffer (SURVEY.md §2 A16)
     re-expressed per key. Emits one row per key per micro-batch with
     buffer occupancy and eviction counts; state is the kept (seq, value)
-    arrays, bounded by keys × cap regardless of stream volume.
-
-    The Spark-4-native form of the same operator is recent_buffer_tws
-    (transformWithStateInPandas + ListState); this variant exists because
-    the TWS state-server protocol needs protobuf, which this container
-    lacks — semantics are identical (both inline merge_evict)."""
+    arrays, bounded by keys × cap regardless of stream volume. Eviction
+    is merge_evict."""
 
     def _fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         seqs, vals = state.get if state.exists else ([], [])
@@ -209,9 +203,7 @@ def recent_buffer(
             incoming.extend(
                 zip(pdf["seq"].astype("int64").tolist(), pdf["value"].astype("float64").tolist())
             )
-        merged = sorted(existing + incoming)  # == merge_evict, inlined
-        dropped = max(0, len(merged) - cap)
-        kept = merged[dropped:]
+        kept, dropped = merge_evict(existing, incoming, cap)
         state.update(([int(s) for s, _ in kept], [float(v) for _, v in kept]))
         yield pd.DataFrame(
             {
@@ -240,88 +232,6 @@ def recent_buffer(
             stateStructType="seqs array<bigint>, vals array<double>",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def recent_buffer_tws(
-    parsed: DataFrame,
-    key_col: str = "user_id",
-    seq_col: str = "kafka_offset",
-    value_col: str = "value",
-    cap: int = 5,
-) -> DataFrame:
-    """recent_buffer via the Spark 4 arbitrary state API
-    (transformWithStateInPandas + ListState) — at scale the buffer lives
-    in the per-key state store (RocksDB provider required via
-    ``spark.sql.streaming.stateStore.providerClass``); timeMode is
-    ``none`` so drivers' processAllAvailable settles (no pending timers).
-
-    The TWS state-server protocol imports google.protobuf; this container
-    has no protobuf install (and installs are forbidden), so
-    roar_spark.session activates the vendored pure-Python runtime shim
-    (roar_spark/vendor/README.md) when the real package is absent — the
-    e2e test (tests/test_streaming_native.py) runs the full protocol
-    against the JVM's real protobuf parser, which conformance-checks the
-    shim byte-for-byte. RocksDB state store provider required (column
-    families); rocksdbjni ships in Spark's jars.
-
-    The processor class is defined locally so cloudpickle ships it BY
-    VALUE: the TWS driver worker is a fresh Python process that cannot
-    import roar_spark (not site-packages-installed), so a module-level
-    class would die with ModuleNotFoundError on unpickle. For the same
-    reason the eviction logic is inlined (3 lines) rather than calling
-    merge_evict — a closure over a module-level function would pickle it
-    by reference; tests pin the two in sync via merge_evict."""
-
-    class RecentBufferProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._buf = handle.getListState("buf", "seq bigint, value double")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            existing = (
-                [(int(r[0]), float(r[1])) for r in self._buf.get()]
-                if self._buf.exists()
-                else []
-            )
-            incoming: list[tuple[int, float]] = []
-            for pdf in rows:
-                incoming.extend(
-                    zip(
-                        pdf["seq"].astype("int64").tolist(),
-                        pdf["value"].astype("float64").tolist(),
-                    )
-                )
-            merged = sorted(existing + incoming)  # == merge_evict, inlined
-            dropped = max(0, len(merged) - cap)
-            kept = merged[dropped:]
-            self._buf.put(kept)
-            yield pd.DataFrame(
-                {
-                    "user_id": [int(key[0])],
-                    "n_buffered": [len(kept)],
-                    "n_dropped": [dropped],
-                    "oldest_seq": [kept[0][0] if kept else None],
-                    "newest_seq": [kept[-1][0] if kept else None],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        parsed.select(
-            F.col(key_col).cast("long").alias("user_id"),
-            F.col(seq_col).cast("long").alias("seq"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-        .filter(F.col("seq").isNotNull())  # see recent_buffer
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RecentBufferProcessor(),
-            outputStructType=BUFFER_SCHEMA,
-            outputMode="update",
-            timeMode="none",
         )
     )
 

@@ -3,9 +3,10 @@
 The r11 audit counted joins with a bare 'SortMergeJoin (' pattern, but
 formatted-plan join tree-lines interleave the join type between name and
 id ("SortMergeJoin LeftOuter (53)") — the pattern could never match and
-the smj/bnlj columns read 0 unconditionally. The r12 fix counts the
+the smj/bnlj columns read 0 unconditionally. Every counter now reads the
 numbered detail headers ("(53) SortMergeJoin"), which are one per node
-and type-free. These tests lock the counting against a real committed
+and type-free, so a node name mentioned inside an argument line counts
+nothing. These tests lock the counting against a real committed
 plan file (so the fixture cannot drift from what explain actually emits)
 plus synthetic corner cases.
 """
@@ -50,13 +51,24 @@ def test_join_type_in_tree_line_does_not_hide_the_join():
 
 
 def test_detail_header_only_counted_once_per_node():
-    p = "(5) BroadcastNestedLoopJoin\n(9) CartesianProduct\n"
+    p = (
+        "(5) BroadcastNestedLoopJoin\n(9) CartesianProduct\n(6) Window\n"
+        "(7) WindowGroupLimit\n(8) SortMergeJoin [codegen id : 3]\n"
+    )
     c = plan_counts(p)
+    assert c["smj"] == 1
     assert c["bnlj"] == 1
     assert c["cart"] == 1
+    assert c["wind"] == 1  # WindowGroupLimit is not a Window
 
 
 def test_mid_line_mention_not_counted():
     # a comment-like mention inside an argument line must not count
-    p = "Arguments: something SortMergeJoin (12) said\n"
-    assert plan_counts(p)["smj"] == 0
+    for line, key in [
+        ("Arguments: something SortMergeJoin (12) said", "smj"),
+        ("Arguments: partitioned like Window (7) upstream", "wind"),
+        ("Arguments: replaces BatchEvalPython (3) here", "rowudf"),
+        ("Arguments: fused into MapInPandas (4) below", "arrow_kernels"),
+        ("Arguments: reads Exchange (9) output", "exch"),
+    ]:
+        assert plan_counts(line + "\n")[key] == 0, line

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from roar_spark.config import EngineConfig
@@ -284,60 +283,6 @@ def test_recent_buffer_drop_oldest_across_batches(spark, tmp_path):
     assert (1, 202, 5, 3, 5) in by_batch
     # user 2: single event, no eviction
     assert (2, 100, 1, 0, 100) in by_batch
-
-
-def test_recent_buffer_tws_plan_and_gate(spark, tmp_path):
-    """The Spark-4-native transformWithStateInPandas form, e2e: the TWS
-    state-server protocol runs through the vendored pure-Python protobuf
-    shim (roar_spark/vendor/README.md; roar_spark.session activates it
-    when no real protobuf exists), and the JVM side parses with REAL
-    protobuf — this run is a byte-level conformance check of the shim.
-    Scenario mirrors the applyInPandasWithState twin (eviction in batch 1,
-    state carried into batch 2), so ListState get/put cross batches."""
-    from roar_spark.streaming.stateful import BUFFER_SCHEMA, recent_buffer, recent_buffer_tws
-
-    src = str(tmp_path / "rbt")
-    write_envelope_file(
-        src,
-        [_msg(i, "2026-08-13T09:00:00Z", event_id=i, kind="view", user_id=1,
-              value=1.0 + i, ts="2026-08-13T10:00:00Z") for i in range(7)]
-        + [_msg(100, "2026-08-13T09:00:00Z", event_id=100, kind="view", user_id=2,
-                value=9.5, ts="2026-08-13T10:00:00Z")],
-        file_name="a.json",
-    )
-    parsed = _parsed_stream(spark, src)
-    tws = recent_buffer_tws(parsed, cap=5)
-    assert tws.isStreaming
-    assert tws.schema == recent_buffer(parsed, cap=5).schema
-    assert tws.schema.simpleString() == (
-        "struct<" + BUFFER_SCHEMA.replace(" bigint", ":bigint").replace(", ", ",") + ">"
-    )
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("TWS state-server protocol needs protobuf (not in container)")
-    # transformWithState keeps each state variable in its own column
-    # family — only the RocksDB provider supports that (the HDFS-backed
-    # default raises STATE_STORE_MULTIPLE_COLUMN_FAMILIES); rocksdbjni
-    # ships in Spark's jars, and this is the provider a cluster would run
-    # for TWS anyway (stateful.py:246)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    more = [_msg(200 + i, "2026-08-13T09:00:01Z", event_id=200 + i, kind="view",
-                 user_id=1, value=50.0 + i, ts="2026-08-13T10:00:01Z") for i in range(3)]
-    try:
-        rows = _run_to_memory(spark, tws, "rbt_out", "update", src_more=more, src=src)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    by_batch = sorted(
-        ((r.user_id, r.newest_seq, r.n_buffered, r.n_dropped, r.oldest_seq) for r in rows)
-    )
-    # same contract as the applyInPandasWithState twin:
-    assert (1, 6, 5, 2, 2) in by_batch  # batch 1: 7 in, cap 5 → 0,1 evicted
-    assert (1, 202, 5, 3, 5) in by_batch  # batch 2: state slides to {5,6,200,201,202}
-    assert (2, 100, 1, 0, 100) in by_batch  # single event, no eviction
 
 
 def test_chained_windowed_aggregations(spark, tmp_path):

@@ -171,3 +171,12 @@ def test_python_tasks_run_from_a_directory_without_the_package(tmp_path):
     )
     assert result.returncode == 0, result.stderr[-3000:]
     assert result.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6, 8, 10]"
+
+
+def test_get_spark_puts_only_the_package_root_on_worker_paths(spark):
+    """get_spark adds the package root to the workers' PYTHONPATH and no
+    vendored runtime to this process's path or to the workers'."""
+    vendor = os.path.join("roar_spark", "vendor")
+    pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    assert PACKAGE_ROOT in pythonpath
+    assert [p for p in sys.path + pythonpath if p.rstrip(os.sep).endswith(vendor)] == []

@@ -19,26 +19,34 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _nodes(p: str, *names: str) -> int:
+    """Count the numbered detail headers ("(53) SortMergeJoin", or with a
+    " [codegen id : 5]" suffix) of the named node types: one per node,
+    whatever the tree line carries."""
+    return sum(
+        len(re.findall(rf"^\(\d+\) {n}(?: \[codegen id : \d+\])?$", p, re.M))
+        for n in names
+    )
+
+
 def plan_counts(p: str) -> dict:
     """Structural node counts for one explain("formatted") string.
 
-    Join tree-lines carry the join type between the node name and the id
-    ("SortMergeJoin LeftOuter (53)"), so a bare 'Name (' pattern NEVER
-    matches them — count the numbered detail headers instead, which are
-    one per node and type-free ("(53) SortMergeJoin"). The r11 audit's
-    smj/bnlj counters had the unmatched pattern and read 0 unconditionally
-    (found + fixed r12; pinned in tests/test_audit_counts.py against a
-    committed plan dump)."""
+    Every counter reads the numbered detail headers, which are one per
+    node and type-free. A tree-line substring misses joins, whose tree
+    lines carry the join type between the name and the id
+    ("SortMergeJoin LeftOuter (53)"), and counts mentions of a node name
+    inside argument lines. Pinned in tests/test_audit_counts.py against a
+    committed plan dump."""
     return {
-        "exch": p.count("+- Exchange") + p.count(":- Exchange"),
-        "bcast": p.count("BroadcastExchange ("),
-        "smj": len(re.findall(r"^\(\d+\) SortMergeJoin", p, re.M)),
-        "bnlj": len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", p, re.M)),
-        "cart": len(re.findall(r"^\(\d+\) CartesianProduct", p, re.M)),
-        "rowudf": p.count("BatchEvalPython (") + p.count("ArrowEvalPython ("),
-        "arrow_kernels": p.count("MapInPandas (")
-        + p.count("FlatMapGroupsInPandas ("),
-        "wind": p.count("Window ("),
+        "exch": _nodes(p, "Exchange"),
+        "bcast": _nodes(p, "BroadcastExchange"),
+        "smj": _nodes(p, "SortMergeJoin"),
+        "bnlj": _nodes(p, "BroadcastNestedLoopJoin"),
+        "cart": _nodes(p, "CartesianProduct"),
+        "rowudf": _nodes(p, "BatchEvalPython", "ArrowEvalPython"),
+        "arrow_kernels": _nodes(p, "MapInPandas", "FlatMapGroupsInPandas"),
+        "wind": _nodes(p, "Window"),
     }
 
 

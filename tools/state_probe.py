@@ -1,11 +1,11 @@
-"""RocksDB state-store sizing probe for the transformWithStateInPandas
-recent-buffer pattern (SCALE.md: state growth at many keys).
+"""RocksDB state-store sizing probe for the keyed recent-buffer
+(``streaming.stateful.recent_buffer``; SCALE.md: state growth at many keys).
 
-The TWS form of recent_buffer keeps one ListState row per key (≤ cap
-(seq bigint, value double) entries). This probe feeds N distinct keys ×
-``rows_per_key`` events (rows_per_key > cap so eviction engages — the
-production pattern), runs the query to completion against the RocksDB
-provider, and reports:
+recent_buffer (applyInPandasWithState) keeps one state row per key: the
+kept ``seqs array<bigint>`` and ``vals array<double>``, at most ``cap``
+entries each. This probe feeds N distinct keys × ``rows_per_key`` events
+(rows_per_key > cap so eviction engages — the production pattern), runs
+the query to completion against the RocksDB provider, and reports:
 
 - ``numRowsTotal`` / ``stateOnCurrentVersionSizeBytes`` style metrics from
   the query's last progress ``stateOperators`` entry (RocksDB custom
@@ -66,7 +66,7 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     from roar_spark.session import get_spark, warm_python_workers
-    from roar_spark.streaming.stateful import recent_buffer_tws
+    from roar_spark.streaming.stateful import recent_buffer
 
     work = args.work_dir
     shutil.rmtree(work, ignore_errors=True)
@@ -106,7 +106,7 @@ def main() -> None:
         spark.readStream.schema("user_id bigint, kafka_offset bigint, value double")
         .parquet(src)
     )
-    out = recent_buffer_tws(stream, cap=args.cap)
+    out = recent_buffer(stream, cap=args.cap)
     t0 = time.perf_counter()
     q = (
         out.writeStream.outputMode("update")
