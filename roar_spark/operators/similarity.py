@@ -287,7 +287,7 @@ def _block_screen_pairs(
     screen_min_single = threshold - 1e-6
 
     if n_blocks <= _MIN_BLOCKS:
-        # Small-corpus fast path (r11): n_blocks floors at _MIN_BLOCKS,
+        # Small-corpus fast path: n_blocks floors at _MIN_BLOCKS,
         # i.e. the corpus is ≤ _MIN_BLOCKS·TARGET_BLOCK_ROWS = 16,384
         # vectors. The blocked machinery (two pair-table joins replicating
         # every vector ~n_blocks times, a (blk_a, blk_b) shuffle, 36
@@ -297,7 +297,7 @@ def _block_screen_pairs(
         # so the survivor set is identical (exact semantics still come
         # from the recheck stage).
         #
-        # The in-task matmul is BLOCKED over query rows (r12, ADVICE r11):
+        # The in-task matmul is BLOCKED over query rows:
         # a dense 16384² float64 cosine matrix is ~2.1 GB in one Python
         # worker — near task-memory limits. Strips of
         # _SCREEN_BLOCK_FLOATS // n rows cap the live matrix at ~32 MB
@@ -359,9 +359,6 @@ def _block_screen_pairs(
     )
     screen_min = threshold - 1e-6
 
-    # KEEP IN SYNC with _lsh_screened_pairs.screen: same normalize+matmul+
-    # threshold+orient kernel, differing only in group key and side naming
-    # (margin handling, zero-norm behavior and dtype must not drift).
     def screen(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["side"] == 0]
         b = pdf[pdf["side"] == 1]
@@ -586,21 +583,15 @@ def _bucket_ids(
 def _entries_from_buckets(
     with_buckets: DataFrame,
     n_planes: int,
-    probe: bool | str,
+    probe: bool,
     n_tables: int = N_TABLES,
     tables=None,
 ) -> DataFrame:
     """Explode precomputed per-table bucket ids into (vec_id, tbl, bkt)
     hash-table entries. With ``probe=True`` each row additionally fans out
     to ALL its Hamming-1 probe buckets (the asymmetric query-vs-corpus
-    shape: the query side must reach every neighbor). ``probe="higher"``
-    fans out only to Hamming-1 buckets with a HIGHER bucket id (plus the
-    identity): for a SYMMETRIC pair space — both sides of the join are
-    the corpus — an unordered Hamming-1 bucket pair (B, B′) with B < B′
-    is covered once via the B-side vector's upward flip, instead of twice
-    (each side probing the other), which halves the probe fan-out (avg
-    1 + planes/2 copies vs 1 + planes) with an identical covered pair
-    set. The explode fans out only key tuples, never embeddings.
+    shape: the query side must reach every neighbor). The explode fans out
+    only key tuples, never embeddings.
 
     ``tables`` restricts the emitted entries to a subset of the hash
     tables (default: all) — the staged per-table screen's lever: one
@@ -614,21 +605,6 @@ def _entries_from_buckets(
     # default knobs — measured 44% of ann_lsh_topk's plan-build (guide
     # §1 "the driver"; same idiom as the simhash signature rebuild).
     tables = range(n_tables) if tables is None else tables
-    if probe == "higher":
-        # flip bit p only when it is 0 in the bucket (XOR then increases
-        # the id); emit NULL otherwise and compact it away
-        entries = []
-        for t in tables:
-            entries.append(f"struct({t} as tbl, b{t} as bkt)")
-            entries.extend(
-                f"if((b{t} & {1 << p}) = 0,"
-                f" struct({t} as tbl, b{t} ^ {1 << p} as bkt), null)"
-                for p in range(n_planes)
-            )
-        arr = f"array_compact(array({', '.join(entries)}))"
-        return with_buckets.selectExpr(
-            "vec_id", f"explode({arr}) as e"
-        ).selectExpr("vec_id", "e.tbl as tbl", "e.bkt as bkt")
     flips = [0] + ([1 << p for p in range(n_planes)] if probe else [])
     entries = [
         f"struct({t} as tbl, b{t} ^ {flip} as bkt)" for t in tables for flip in flips
@@ -977,51 +953,53 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair recall ≥ 99.9% at candidate volumes growing O(n·log n), which is the
 # regime a production embedding-dedup (SemDeDup-style) actually runs in.
 
-DEDUP_EMB_TABLES = 8  # OR-amplification doubled vs ANN: pair recall needs
-# BOTH endpoints in one bucket, i.e. per-table success ~P^planes with no
-# query-side multiprobe boost on the corpus side
 DEDUP_EMB_ALLPAIRS_MAX_ROWS = 20_000
 
-# Probe-free banding (r10): the production screen drops Hamming-1 probing
-# entirely and compensates with MORE, slightly NARROWER tables. Fan-out
-# per vector collapses from tables·(2 + planes/2) key-tagged payload
-# copies (= 92 at 16M with the probed 8-table config — by far the most
-# expensive shuffle per row in the repo, SCALE.md r9) to exactly
-# `tables` copies: a probe-free pair space is symmetric Hamming-0, so
-# each bucket group self-screens (upper-triangle matmul) and needs no
-# plain/probe sides. Config chosen from the closed-form recall model
-# (recall = 1-(1-P^b)^T, P = 1-θ/π; probed per-table success adds the
-# b·P^(b-1)·(1-P) Hamming-1 term) evaluated at 16M rows (b0 = 19):
+# Probe-free banding: the screen does no Hamming-1 probing and instead
+# uses MORE, slightly NARROWER tables. Fan-out per vector is exactly
+# `tables` payload copies, against tables·(2 + planes/2) for a Hamming≤1
+# probed space (= 92 at 16M with 8 tables — by far the most expensive
+# shuffle per row in the repo, SCALE.md r9): a probe-free pair space is
+# symmetric Hamming-0, so each bucket group self-screens (upper-triangle
+# matmul) and needs no plain/probe sides. Config chosen from the
+# closed-form recall model (recall = 1-(1-P^b)^T, P = 1-θ/π; probed
+# per-table success adds the b·P^(b-1)·(1-P) Hamming-1 term) evaluated at
+# 16M rows (b0 = 19):
 #
 #   config            fan    cos .93   .95    .97    .99
-#   probed 8 x b0      92     .953    .986   .9985  1.000   (r9 prod)
-#   PF   14 x b0       14     .727    .862   .965   .9995   (verdict's
-#   PF   16 x (b0-1)   16     .817    .921   .985   .9999    12-16 range:
-#   PF   24 x (b0-1)   24     .921    .978   .998   1.000    -4..-12 pts
-#                                                            at .95)
+#   probed 8 x b0      92     .953    .986   .9985  1.000
+#   PF   14 x b0       14     .727    .862   .965   .9995
+#   PF   16 x (b0-1)   16     .817    .921   .985   .9999
+#   PF   24 x (b0-1)   24     .921    .978   .998   1.000
 #
 # 24 tables one bit narrower is the smallest fan-out that stays within
 # ~1 recall point of the probed config everywhere above cos 0.93 (the
 # regime an embedding dedup runs in); 3.8x fewer screen entries and
 # ~1.7x fewer screen FLOPs (occupancy doubles but the probe-side
-# replication factor ~10.5 disappears). Empirical sweep in SCALE.md r10.
+# replication factor ~10.5 disappears). Empirical sweep in SCALE.md r10;
+# end to end the probed screen measured 4.2x slower at 4M and 2.1x at 16M
+# (SCALE.md). Wider angles are the exact block screen's regime.
 DEDUP_EMB_TABLES_PF = 24
 DEDUP_EMB_PF_PLANES_DELTA = 1  # planes = n_planes_for(n) - 1 (occupancy 2x)
 
 
+def dedup_emb_planes_for(n_rows: int) -> int:
+    """Planes per table of the dedup banding config: one bit narrower
+    than n_planes_for (bucket occupancy 2x), floored at _MIN_PLANES."""
+    return max(_MIN_PLANES, n_planes_for(n_rows) - DEDUP_EMB_PF_PLANES_DELTA)
+
+
 def _lsh_candidate_pairs(
-    emb: DataFrame, n_planes: int, dim: int, n_tables: int = DEDUP_EMB_TABLES
+    emb: DataFrame, n_planes: int, dim: int, n_tables: int = DEDUP_EMB_TABLES_PF
 ) -> DataFrame:
     """Unordered candidate (vec_id_a < vec_id_b) pairs that share a bucket
-    (exactly, or at Hamming distance 1) in ANY of the hash tables.
+    exactly in ANY of the hash tables — the pair space the production
+    screen enumerates.
 
     Buckets are computed once (single matmul — see _bucket_ids) and
-    persisted; the probe side fans each vector to its 1+planes Hamming-1
-    buckets, the plain side keeps the true bucket, and the equi-join on
-    (tbl, bkt) yields every pair within Hamming ≤ 1 of each other in some
-    table. Only (vec_id, tbl, bkt) key tuples shuffle — embeddings never
-    enter the pair stage. least/greatest normalization before distinct:
-    either endpoint may be the probing side.
+    persisted; each vector contributes one (tbl, bkt) entry per table and
+    the entry set self-joins on (tbl, bkt). Only key tuples shuffle —
+    embeddings never enter the pair stage.
 
     DIAGNOSTIC surface: this materialization makes candidate VOLUME
     directly countable (tests/test_dedup_embedding_lsh.py's sub-quadratic
@@ -1030,23 +1008,14 @@ def _lsh_candidate_pairs(
     (_lsh_screened_pairs) so per-pair cost is BLAS, not a fold."""
     wb = _persist_bounded(_bucket_ids(emb, n_planes, dim, n_tables))
     wb.count()  # eager: see _lsh_screened_pairs (concurrent-scan cache race)
-    # "higher": the pair space is symmetric (corpus vs corpus), so upward-
-    # only Hamming-1 probing covers every unordered bucket pair once
-    # instead of twice — identical candidate set after the distinct
-    left = _entries_from_buckets(wb, n_planes, probe="higher", n_tables=n_tables).select(
-        F.col("vec_id").alias("id_l"), "tbl", "bkt"
-    )
-    right = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables).select(
-        F.col("vec_id").alias("id_r"), "tbl", "bkt"
-    )
+    entries = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
+    left = entries.select(F.col("vec_id").alias("vec_id_a"), "tbl", "bkt")
+    right = entries.select(F.col("vec_id").alias("vec_id_b"), "tbl", "bkt")
     return (
         left.join(right, ["tbl", "bkt"])
-        .filter(F.col("id_l") != F.col("id_r"))
-        .select(
-            F.least("id_l", "id_r").alias("vec_id_a"),
-            F.greatest("id_l", "id_r").alias("vec_id_b"),
-        )
-        .distinct()
+        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
+        .select("vec_id_a", "vec_id_b")
+        .distinct()  # pairs collide in several tables
     )
 
 
@@ -1055,36 +1024,32 @@ def _lsh_screened_pairs(
     n_planes: int,
     dim: int,
     threshold: float,
-    n_tables: int = DEDUP_EMB_TABLES,
+    n_tables: int = DEDUP_EMB_TABLES_PF,
     tables=None,
-    probing: bool = True,
     _wb: DataFrame | None = None,
 ) -> DataFrame:
     """The production pair stage: bucket-grouped matmul screen over the
     banded candidate space, emitting only pairs with screen cosine ≥
     threshold−margin.
 
-    ``probing=False`` is the r10 probe-free form (see DEDUP_EMB_TABLES_PF):
-    the pair space is exact-collision (Hamming-0) in any table, each
-    vector contributes ONE entry per table, and each (tbl, bkt) group
-    self-screens with an upper-triangle matmul — no plain/probe sides, so
-    the replicated payload is tables·n rows instead of
-    tables·(2+planes/2)·n. ``probing=True`` keeps the r6–r9 Hamming≤1
-    space (the A/B baseline; recall model in the constants comment).
+    The pair space is exact-collision (Hamming-0) in any table (see
+    DEDUP_EMB_TABLES_PF): each vector contributes ONE entry per table, and
+    each (tbl, bkt) group self-screens with an upper-triangle matmul, so
+    the replicated payload is tables·n rows.
 
     _lsh_candidate_pairs materializes every bucket collision as an id pair
     and re-joins embeddings — fine for measuring candidate volume, but the
     per-pair interpreted cosine fold then dominates wall-clock (measured
     44.5 s at n=20k: ~25 M candidate folds + a 25 M-row distinct). Here the
     pair enumeration never leaves the bucket group: entries join embeddings
-    ONCE (replication = tables·n probe-free, tables·(2+planes/2)·n probed —
-    linear either way), each (tbl, bkt) group does one numpy matmul (the
-    BLAS kernel the per-pair folds should have been), and only screen
-    survivors — actual near-dups, not candidates — reach the distinct and
-    the exact recheck. Per-group memory is bounded by bucket occupancy
-    (targeted 32, see n_planes_for); a skewed hot bucket concentrates work
-    the same way any bucketed pair stage does (simhash pigeonhole,
-    minhash banding) and is equally visible in the group size."""
+    ONCE (replication = tables·n, linear), each (tbl, bkt) group does one
+    numpy matmul (the BLAS kernel the per-pair folds should have been), and
+    only screen survivors — actual near-dups, not candidates — reach the
+    distinct and the exact recheck. Per-group memory is bounded by bucket
+    occupancy (targeted 32, see n_planes_for); a skewed hot bucket
+    concentrates work the same way any bucketed pair stage does (simhash
+    pigeonhole, minhash banding) and is equally visible in the group
+    size."""
     import numpy as np
     import pandas as pd
 
@@ -1096,148 +1061,103 @@ def _lsh_screened_pairs(
         # each racing scan — the hash matmul ran twice at once, doubling
         # Python-worker load and cache allocation (measured: the
         # hash/persist region ballooned 90 s → ~900 s with 3034 core-s of
-        # JVM GC at 4M; r10 event-log attribution). One count() populates
+        # JVM GC at 4M; event-log attribution). One count() populates
         # the cache before the fan-out; every downstream scan then reads it.
         wb.count()
     else:
         wb = _wb  # staged caller shares ONE materialized bucket table
     import math
 
+    # Screen payload = the int8-quantized unit vector _bucket_ids already
+    # computed (~3.3× smaller than array<float> on the wire). The margin
+    # is the PROVEN dim-dependent quantization bound on the RE-NORMALIZED
+    # quantized vectors the kernel compares (derivation in _bucket_ids):
+    # with ε = √dim·(0.5/127), renormalization re-inflates the raw q/127
+    # error by at most 1/(1−ε/2), and cos is 1-Lipschitz per unit
+    # argument, so 2·ε/(1−ε/2) (+ float slack) can never screen out a
+    # true pair. Survivors still get the exact fold, so results stay
+    # bit-identical.
     eps = math.sqrt(dim) * (0.5 / 127.0)
     screen_min = threshold - (2.0 * eps / max(1.0 - eps / 2.0, 0.5) + 1e-6)
 
-    if not probing:
-        entries = _entries_from_buckets(
-            wb, n_planes, probe=False, n_tables=n_tables, tables=tables
-        )
-        tagged = entries.join(
-            wb.select("vec_id", F.col("qemb").alias("embedding")), "vec_id"
-        )
-        # SORTED-STREAM kernel, not applyInPandas: FlatMapGroupsInPandas
-        # calls Python once PER GROUP, and at the targeted occupancy (~64
-        # rows/bucket) the per-call overhead (Arrow slice → pandas frame →
-        # object-array stack) measured ~4.5 ms/group — 223 s of the 354 s
-        # 4M screen with the JVM 91% idle (r10 event-log attribution,
-        # SCALE.md). Hash-repartition on the group key + sort-within-
-        # partition gives the same contiguous-groups layout; mapInPandas
-        # then slices HUNDREDS of groups out of each ~10k-row Arrow batch
-        # with one stack/normalize per batch and pure numpy views per
-        # group. A group can span Arrow batch boundaries, so the tail
-        # group of every batch carries forward until its key changes.
-        # Same exchange volume and pair space as the grouped form —
-        # only the Python-call granularity changes.
-        # single int64 group key: tbl < 2^6 tables, bkt < 2^planes <= 2^24.
-        # The key gives bkt 32 bits — n_planes > 32 would silently merge
-        # buckets ACROSS tables (a merged group shares one top-k/threshold
-        # cut and can screen out candidates that survive in their own
-        # bucket). n_planes_for caps at _MAX_PLANES = 24 today; enforce
-        # the invariant where the key is built (ADVICE r11).
-        assert n_planes <= 32, f"packed (tbl,bkt) key needs n_planes <= 32, got {n_planes}"
-        key = F.col("tbl").cast("long") * F.lit(4294967296) + F.col("bkt")
-        tagged = (
-            tagged.withColumn("gk", key)
-            .repartition("gk")
-            .sortWithinPartitions("gk")
-            .select("gk", "vec_id", "embedding")
-        )
-
-        def screen_stream(batches):
-            def emit(ids, u):
-                cos = u @ u.T
-                ia, ib = np.nonzero(np.triu(cos >= screen_min, k=1))
-                if len(ia) == 0:
-                    return None
-                lo = np.minimum(ids[ia], ids[ib])
-                hi = np.maximum(ids[ia], ids[ib])
-                return pd.DataFrame({"vec_id_a": lo, "vec_id_b": hi})
-
-            carry = None  # (keys, ids, unit_rows) of the batch-tail group
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                keys = pdf["gk"].to_numpy()
-                ids = pdf["vec_id"].to_numpy()
-                u = _unit_rows(np.stack(pdf["embedding"].to_numpy()).astype("float64"))
-                if carry is not None:
-                    ck, ci, cu = carry
-                    keys = np.concatenate([ck, keys])
-                    ids = np.concatenate([ci, ids])
-                    u = np.concatenate([cu, u])
-                    carry = None
-                # contiguous groups: starts[i]..starts[i+1] share a key
-                starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-                # the last group may continue in the next batch — carry it
-                carry = (keys[starts[-1]:], ids[starts[-1]:], u[starts[-1]:])
-                out = []
-                for i in range(len(starts) - 1):
-                    lo, hi = starts[i], starts[i + 1]
-                    if hi - lo >= 2:
-                        res = emit(ids[lo:hi], u[lo:hi])
-                        if res is not None:
-                            out.append(res)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-            if carry is not None and len(carry[1]) >= 2:
-                res = emit(carry[1], carry[2])
-                if res is not None:
-                    yield res
-
-        return (
-            tagged.mapInPandas(screen_stream, "vec_id_a long, vec_id_b long")
-            .distinct()  # pairs survive in several tables
-        )
-
-    plain = _entries_from_buckets(
+    entries = _entries_from_buckets(
         wb, n_planes, probe=False, n_tables=n_tables, tables=tables
-    ).select("vec_id", "tbl", "bkt", F.lit(0).alias("side"))
-    # "higher" probing: symmetric pair space — every Hamming-1 bucket pair
-    # screened once (the lower side's upward flip), not twice; halves the
-    # replicated payload with an identical covered pair set
-    probe = _entries_from_buckets(
-        wb, n_planes, probe="higher", n_tables=n_tables, tables=tables
-    ).select("vec_id", "tbl", "bkt", F.lit(1).alias("side"))
-    # screen payload = the int8-quantized unit vector _bucket_ids already
-    # computed (~3.3× smaller than array<float> on the wire): the probe
-    # replication is tables·(1+planes/2)·n rows of payload, and at 4M docs
-    # the float form's ~190 GB shuffle+spill filled the local disk (r6).
-    # The margin is the PROVEN dim-DEPENDENT quantization bound on the
-    # RE-NORMALIZED quantized vectors the kernel actually compares
-    # (_unit_rows below — derivation in _bucket_ids): with
-    # ε = √dim·(0.5/127), renormalization re-inflates the raw q/127 error
-    # by at most 1/(1−ε/2) (norm-ratio inequality; sphere projection does
-    # NOT contract for points inside the sphere), and cos is 1-Lipschitz
-    # per unit argument, so 2·ε/(1−ε/2) (+ float slack) can never screen
-    # out a true pair — a hardcoded 0.07 was only valid up to dim ≈ 78
-    # (r6 review), and the bare 2·ε of r6 omitted the renormalization
-    # factor (r6 ADVICE). Survivors still get the exact fold, so results
-    # stay bit-identical.
-    tagged = plain.unionAll(probe).join(
+    )
+    tagged = entries.join(
         wb.select("vec_id", F.col("qemb").alias("embedding")), "vec_id"
     )
+    # SORTED-STREAM kernel, not applyInPandas: FlatMapGroupsInPandas
+    # calls Python once PER GROUP, and at the targeted occupancy (~64
+    # rows/bucket) the per-call overhead (Arrow slice → pandas frame →
+    # object-array stack) measured ~4.5 ms/group — 223 s of the 354 s
+    # 4M screen with the JVM 91% idle (event-log attribution, SCALE.md).
+    # Hash-repartition on the group key + sort-within-partition gives
+    # the contiguous-groups layout; mapInPandas then slices HUNDREDS of
+    # groups out of each ~10k-row Arrow batch with one stack/normalize
+    # per batch and pure numpy views per group. A group can span Arrow
+    # batch boundaries, so the tail group of every batch carries forward
+    # until its key changes.
+    # single int64 group key: tbl < 2^6 tables, bkt < 2^planes <= 2^24.
+    # The key gives bkt 32 bits — n_planes > 32 would silently merge
+    # buckets ACROSS tables (a merged group shares one top-k/threshold
+    # cut and can screen out candidates that survive in their own
+    # bucket). n_planes_for caps at _MAX_PLANES = 24 today; enforce
+    # the invariant where the key is built.
+    assert n_planes <= 32, f"packed (tbl,bkt) key needs n_planes <= 32, got {n_planes}"
+    key = F.col("tbl").cast("long") * F.lit(4294967296) + F.col("bkt")
+    tagged = (
+        tagged.withColumn("gk", key)
+        .repartition("gk")
+        .sortWithinPartitions("gk")
+        .select("gk", "vec_id", "embedding")
+    )
 
-    # KEEP IN SYNC with _block_screen_pairs.screen (see note there).
-    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf[pdf["side"] == 0]
-        q = pdf[pdf["side"] == 1]
-        if p.empty or q.empty:
-            return pd.DataFrame({"vec_id_a": [], "vec_id_b": []}).astype("int64")
-        mp = np.stack(p["embedding"].to_numpy()).astype("float64")
-        mq = np.stack(q["embedding"].to_numpy()).astype("float64")
-        cos = _unit_rows(mp) @ _unit_rows(mq).T
-        # zero-norm rows: NaN >= screen_min is False — dropped, matching
-        # the exact recheck's NULL-cosine rejection
-        ip, iq = np.nonzero(cos >= screen_min)
-        ids_p = p["vec_id"].to_numpy()[ip]
-        ids_q = q["vec_id"].to_numpy()[iq]
-        lo = np.minimum(ids_p, ids_q)
-        hi = np.maximum(ids_p, ids_q)
-        keep = lo < hi  # drops self-pairs and orients the rest
-        return pd.DataFrame({"vec_id_a": lo[keep], "vec_id_b": hi[keep]}).drop_duplicates()
+    def screen_stream(batches):
+        def emit(ids, u):
+            cos = u @ u.T
+            # zero-norm rows: NaN >= screen_min is False — dropped,
+            # matching the exact recheck's NULL-cosine rejection
+            ia, ib = np.nonzero(np.triu(cos >= screen_min, k=1))
+            if len(ia) == 0:
+                return None
+            lo = np.minimum(ids[ia], ids[ib])
+            hi = np.maximum(ids[ia], ids[ib])
+            return pd.DataFrame({"vec_id_a": lo, "vec_id_b": hi})
+
+        carry = None  # (keys, ids, unit_rows) of the batch-tail group
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            keys = pdf["gk"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
+            u = _unit_rows(np.stack(pdf["embedding"].to_numpy()).astype("float64"))
+            if carry is not None:
+                ck, ci, cu = carry
+                keys = np.concatenate([ck, keys])
+                ids = np.concatenate([ci, ids])
+                u = np.concatenate([cu, u])
+                carry = None
+            # contiguous groups: starts[i]..starts[i+1] share a key
+            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+            # the last group may continue in the next batch — carry it
+            carry = (keys[starts[-1]:], ids[starts[-1]:], u[starts[-1]:])
+            out = []
+            for i in range(len(starts) - 1):
+                lo, hi = starts[i], starts[i + 1]
+                if hi - lo >= 2:
+                    res = emit(ids[lo:hi], u[lo:hi])
+                    if res is not None:
+                        out.append(res)
+            if out:
+                yield pd.concat(out, ignore_index=True)
+        if carry is not None and len(carry[1]) >= 2:
+            res = emit(carry[1], carry[2])
+            if res is not None:
+                yield res
 
     return (
-        tagged.groupBy("tbl", "bkt")
-        .applyInPandas(screen, "vec_id_a long, vec_id_b long")
-        .distinct()  # pairs survive in several tables/buckets
+        tagged.mapInPandas(screen_stream, "vec_id_a long, vec_id_b long")
+        .distinct()  # pairs survive in several tables
     )
 
 
@@ -1265,25 +1185,22 @@ def _lsh_screened_pairs_staged(
     n_planes: int,
     dim: int,
     threshold: float,
-    n_tables: int = DEDUP_EMB_TABLES,
-    probing: bool = True,
+    n_tables: int = DEDUP_EMB_TABLES_PF,
 ) -> DataFrame:
     """The screen executed ONE HASH TABLE AT A TIME: identical pair space
     and survivors as _lsh_screened_pairs (equivalence pinned), but the
-    live shuffle is one table's fan-out — n entries probe-free,
-    n·(2 + planes/2) probed — instead of all tables' at once. This is the
-    disk lever the r8 verdict demanded: the probed single-job screen at
-    16M rows wrote ≈ 92 entry copies/vector and died on that box's disk
-    (SCALE.md r8); staging divides the PEAK by n_tables and releases each
-    stage's files before the next starts (_release_stage_shuffles). Since
-    r10's probe-free banding cut the fan-out to 24 copies/vector, the
-    single-job form fits 16M and staging engages only above
-    DEDUP_EMB_STAGED_MAX_ENTRIES (= 32M+ rows probe-free; measured: 32M
-    staged in 1263.8 s, SCALE.md r10). Cost: n_tables sequential jobs
-    over the one eagerly-materialized bucket table (the hash matmul runs
-    once — wb is shared) plus a tiny cross-stage distinct; on a cluster
-    the same operator runs single-job (the shuffle service owns the
-    disk) — this is a single-box disk guard, not a semantics change.
+    live shuffle is one table's fan-out — n entries — instead of all
+    tables' at once. A single-job screen with 92 entry copies/vector died
+    on this box's disk at 16M rows (SCALE.md r8); staging divides the
+    PEAK by n_tables and releases each stage's files before the next
+    starts (_release_stage_shuffles). At 24 copies/vector the single-job
+    form fits 16M and staging engages only above
+    DEDUP_EMB_STAGED_MAX_ENTRIES (= 16.7M+ rows; measured: 32M staged in
+    1263.8 s, SCALE.md r10). Cost: n_tables sequential jobs over the one
+    eagerly-materialized bucket table (the hash matmul runs once — wb is
+    shared) plus a tiny cross-stage distinct; on a cluster the same
+    operator runs single-job (the shuffle service owns the disk) — this
+    is a single-box disk guard, not a semantics change.
 
     Each stage's survivors are actual near-dup pairs (screen output, not
     candidates) — localCheckpoint materializes kilobytes-to-megabytes,
@@ -1304,7 +1221,6 @@ def _lsh_screened_pairs_staged(
             threshold,
             n_tables=n_tables,
             tables=[t],
-            probing=probing,
             _wb=wb,
         )
         # eager: runs THIS table's job now; truncates lineage so the
@@ -1312,25 +1228,24 @@ def _lsh_screened_pairs_staged(
         parts.append(stage.localCheckpoint(eager=True))
         _release_stage_shuffles(spark)
     # Every stage has run: wb is spent — swap the family cache to the
-    # stages' cleanup handles (r12, ADVICE r11). This releases wb NOW
-    # instead of at the next operator, and frees the checkpointed stage
-    # blocks explicitly when the next similarity invocation swaps them
-    # out (they were previously freed only by GC).
+    # stages' cleanup handles. This releases wb NOW instead of at the
+    # next operator, and frees the checkpointed stage blocks explicitly
+    # when the next similarity invocation swaps them out (otherwise they
+    # are freed only by GC).
     register_scoped(_WB_CACHE, _WB_CACHE_LOCK, [checkpoint_handle(p) for p in parts])
     return reduce(DataFrame.unionAll, parts).distinct()
 
 
 DEDUP_EMB_STAGED_MAX_ENTRIES = 400_000_000  # single-JOB screen-entry budget
 # on this box, in replicated payload ENTRIES (n·fanout/vector), calibrated
-# from the r8 probes with the probed config: 4M·92 = 368M entries
+# from the r8 probes with a 92-copy fan-out: 4M·92 = 368M entries
 # completed single-job, 16M·92 = 1.47G died in the screen-entry shuffle.
 # Above the budget the screen runs staged per-table (peak shuffle ÷
 # tables, files released between stages). Entry-denominated rather than
-# row-denominated because the r10 probe-free screen cut fanout 92 → 24:
-# probe-free 16M is 384M entries and correctly runs SINGLE-JOB where the
-# probed form had to stage. On a cluster with a shuffle service the
-# single-job form is fine at any n — this is a single-box disk guard,
-# not a semantics change (equivalence pinned).
+# row-denominated because the fan-out is a config choice: at 24
+# copies/vector 16M is 384M entries and runs SINGLE-JOB. On a cluster
+# with a shuffle service the single-job form is fine at any n — this is
+# a single-box disk guard, not a semantics change (equivalence pinned).
 
 
 def dedup_embedding_lsh(
@@ -1339,7 +1254,6 @@ def dedup_embedding_lsh(
     threshold: float = COSINE_THRESHOLD,
     force_lsh: bool | None = None,
     force_staged: bool | None = None,
-    force_probing: bool | None = None,
     force_corpus_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup dedup with an LSH candidate stage: keep-first
@@ -1361,9 +1275,7 @@ def dedup_embedding_lsh(
     shared exact ordered fold, so every emitted decision is exact — only
     the candidate set is approximate. Shuffle: tables·n bucket-keyed
     payload entries + survivor id pairs — sub-quadratic growth pinned by
-    the same test and the scale_smoke table. ``force_probing=True``
-    selects the r6–r9 Hamming≤1 probed space (8 wider tables,
-    tables·(2+planes/2)·n entries — the measured A/B baseline).
+    the same test and the scale_smoke table.
 
     Above DEDUP_EMB_STAGED_MAX_ENTRIES replicated entries the screen runs
     STAGED per hash table (_lsh_screened_pairs_staged): identical pair
@@ -1374,52 +1286,33 @@ def dedup_embedding_lsh(
 
     n = table_row_count("embeddings", sf_dir)
     use_lsh = force_lsh if force_lsh is not None else n > DEDUP_EMB_ALLPAIRS_MAX_ROWS
-    probing = force_probing if force_probing is not None else False
     # force_corpus_rows derives the BANDING config (plane count) as if the
     # corpus had that many rows — the recall-pin tests run the 16M-scale
     # config on a small planted corpus (pair recall depends only on the
     # pair's own codes, never on corpus size). Cost levers (staging,
     # shuffle-width tuning) still follow the REAL row count.
     n_cfg = force_corpus_rows if force_corpus_rows is not None else n
-    if probing:
-        n_tables = DEDUP_EMB_TABLES
-        n_planes = n_planes_for(n_cfg)
-        # float, not //: the 400M entry budget was calibrated from the
-        # documented ~92 copies/vector = 8·(2 + 19/2); truncating to
-        # 8·(2 + 19//2) = 88 under-counted ~4-5% near the staging
-        # boundary (r10 ADVICE)
-        per_table = 2 + n_planes / 2
-    else:
-        n_tables = DEDUP_EMB_TABLES_PF
-        n_planes = max(_MIN_PLANES, n_planes_for(n_cfg) - DEDUP_EMB_PF_PLANES_DELTA)
-        per_table = 1.0
-    fanout = n_tables * per_table
+    n_planes = dedup_emb_planes_for(n_cfg)
+    entries = n * DEDUP_EMB_TABLES_PF  # one screen entry per vector per table
     staged = (
         force_staged
         if force_staged is not None
-        else n * fanout > DEDUP_EMB_STAGED_MAX_ENTRIES
+        else entries > DEDUP_EMB_STAGED_MAX_ENTRIES
     )
     # spread on the LSH path: the first stage is the dense hash matmul
     # (heavy per-row work, no early shuffle) — exactly the documented
     # opt-in case; a single-row-group file would serialize it in one task
     if use_lsh:
         # heaviest shuffle: the screen's replicated payload through the
-        # (tbl,bkt) groupBy (ONE table's worth when staged); width travels
+        # (tbl,bkt) exchange (ONE table's worth when staged); width travels
         # with this plan via the (possibly cloned) session
         from roar_spark.session import tuned_session
 
-        spark = tuned_session(spark, int(n * (per_table if staged else fanout)))
+        spark = tuned_session(spark, n if staged else entries)
     emb = _with_norm(load_table(spark, "embeddings", sf_dir, spread=use_lsh))
     if use_lsh:
         screen = _lsh_screened_pairs_staged if staged else _lsh_screened_pairs
-        cand = screen(
-            emb,
-            n_planes,
-            embedding_dim(sf_dir),
-            threshold,
-            n_tables=n_tables,
-            probing=probing,
-        )
+        cand = screen(emb, n_planes, embedding_dim(sf_dir), threshold)
         pairs = _exact_pair_recheck(emb, cand, threshold)
     else:
         pairs = _exact_cosine_pairs(spark, sf_dir, threshold)
@@ -1604,7 +1497,6 @@ def _knn_screened_candidates(
     n_planes: int,
     dim: int,
     k: int,
-    probe: bool,
     n_tables: int = N_TABLES,
     quantize: bool = False,
 ) -> DataFrame:
@@ -1646,32 +1538,20 @@ def _knn_screened_candidates(
     import pandas as pd
 
     # The bucket table is persisted+eagerly-counted ONLY when the plan
-    # consumes it more than once (probe=True: corpus + probed entry
-    # branches; quantize=True: entries + the qemb payload join) — the
-    # concurrent-scan cache race _lsh_screened_pairs documents. On the
-    # default bulk path (probe=False, quantize=False) wb has exactly ONE
-    # consumer — the entry explode — so the r11 persist+count was a pure
-    # extra job plus cache build, and skipping it lets the hash matmul
-    # pipeline straight into the explode and the group-key exchange's map
-    # side (one stage, no cache bytes). Measured r12: exec −0.3–0.5 s at
-    # sf0.1; at scale it removes an n-row cache nobody rereads.
+    # consumes it more than once (quantize=True: entries + the qemb
+    # payload join) — the concurrent-scan cache race _lsh_screened_pairs
+    # documents. Unquantized, wb has exactly ONE consumer — the entry
+    # explode — so a persist+count would be a pure extra job plus cache
+    # build; skipping it lets the hash matmul pipeline straight into the
+    # explode and the group-key exchange's map side (one stage, no cache
+    # bytes; measured exec −0.3–0.5 s at sf0.1).
     wb = _bucket_ids(emb, n_planes, dim, n_tables, emit_qemb="int16" if quantize else False)
-    if probe or quantize:
+    if quantize:
         wb = _persist_bounded(wb)
         wb.count()  # eager: see _lsh_screened_pairs (concurrent-scan cache race)
-    base = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
-    if probe:
-        tagged = base.select("vec_id", "tbl", "bkt", F.lit(0).alias("side")).unionAll(
-            _entries_from_buckets(wb, n_planes, probe=True, n_tables=n_tables).select(
-                "vec_id", "tbl", "bkt", F.lit(1).alias("side")
-            )
-        )
-    else:
-        # probe off (the default): corpus and query entry sets are byte-
-        # identical, so ONE explosion (every row is both sides) halves the
-        # volume of the dim-wide embedding column through the (tbl, bkt)
-        # shuffle vs. unioning two copies
-        tagged = base.select("vec_id", "tbl", "bkt")
+    # corpus and query entry sets are identical (probe-free), so ONE
+    # explosion serves both sides: every row is a query and a candidate
+    tagged = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
     if quantize:
         # int16 screen payload (scale cancels under renormalization): the
         # entry shrinks from ~620 B (array<float> + row overhead, measured
@@ -1698,26 +1578,27 @@ def _knn_screened_candidates(
         eps = math.sqrt(dim) * (0.5 / 32767.0)
         margin += 2.0 * (2.0 * eps / (1.0 - eps / 2.0))
 
-    def topk_keep(ids_q, ids_p, mq, mp):
-        """Per-group top-k-with-margin screen: returns the surviving
-        (query_row, corpus_row, cos) triples. Blocked over query rows so
+    def topk_keep(ids, u):
+        """Per-group top-k-with-margin screen — every row of the group
+        is a query against every row of it: returns the surviving
+        (query_id, vec_id, cos) triples. Blocked over query rows so
         peak memory is O(block × corpus) — bucket occupancy is ~32 by
         construction, but hash skew (a duplicate-heavy corpus puts every
         copy of a vector in ONE bucket in EVERY table) is unbounded, and
         a dense d×d float64 cosine matrix at d=100k would be ~80 GB. Each
         query row's top-k depends only on its own matrix row, so blocking
         changes nothing semantically."""
-        nc = len(ids_p)
+        nc = len(ids)
         kk = min(k, nc)
         block = max(1, _SCREEN_BLOCK_FLOATS // max(1, nc))
         out_q: list[np.ndarray] = []
         out_p: list[np.ndarray] = []
         out_c: list[np.ndarray] = []
-        for s in range(0, len(ids_q), block):
-            cos = mq[s : s + block] @ mp.T  # block × corpus
+        for s in range(0, nc, block):
+            cos = u[s : s + block] @ u.T  # block × group
             cos[np.isnan(cos)] = -2.0  # zero-norm rows: never neighbors
             # (exact stage's NULL cosine) — and keeps the k-th real
-            self_mask = ids_q[s : s + block, None] == ids_p[None, :]
+            self_mask = ids[s : s + block, None] == ids[None, :]
             cos[self_mask] = -2.0  # a vector is never its own neighbor
             # k-th largest per query row; the masked -2 self entries can
             # only LOWER the cut (more survivors), never exclude a real one
@@ -1726,53 +1607,23 @@ def _knn_screened_candidates(
             # survive the rank cut in an under-full bucket (kth = -2)
             keep = (cos >= kth[:, None] - margin) & (cos > -1.5)
             iq, ip = np.nonzero(keep)
-            out_q.append(ids_q[s + iq])
-            out_p.append(ids_p[ip])
+            out_q.append(ids[s + iq])
+            out_p.append(ids[ip])
             out_c.append(cos[iq, ip])
         return out_q, out_p, out_c
 
-    if probe:
-        # KEEP IN SYNC with _lsh_screened_pairs.screen (normalization +
-        # stack). The asymmetric probed space keeps the grouped kernel
-        # (non-default; ann-style small query sets).
-        def screen_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            p = pdf[pdf["side"] != 1]  # corpus rows (side 0 or 2)
-            q = pdf[pdf["side"] != 0]  # query rows (side 1 or 2)
-            if p.empty or q.empty:
-                empty = pd.DataFrame({"query_id": [], "vec_id": []}).astype("int64")
-                empty["cos"] = pd.Series([], dtype="float64")
-                return empty
-            mp = _unit_rows(np.stack(p["embedding"].to_numpy()).astype("float64"))
-            mq = _unit_rows(np.stack(q["embedding"].to_numpy()).astype("float64"))
-            out_q, out_p, out_c = topk_keep(
-                q["vec_id"].to_numpy(), p["vec_id"].to_numpy(), mq, mp
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_p),
-                    "cos": np.concatenate(out_c),
-                }
-            )
-
-        return tagged.groupBy("tbl", "bkt").applyInPandas(
-            screen_topk, "query_id long, vec_id long, cos double"
-        )
-
-    # Probe-free (the default): SORTED-STREAM kernel, not applyInPandas —
-    # the same r10 rework _lsh_screened_pairs carries, applied to the
-    # bulk-kNN screen (r11). FlatMapGroupsInPandas calls Python once PER
-    # (tbl, bkt) GROUP (~4.5 ms/group measured in the r10 event-log
+    # SORTED-STREAM kernel, not applyInPandas — the same shape
+    # _lsh_screened_pairs carries. FlatMapGroupsInPandas calls Python
+    # once PER (tbl, bkt) GROUP (~4.5 ms/group measured in the event-log
     # attribution); at sf0.1 that is ~256 groups ≈ 1.2 s of pure call
     # overhead for a 2k-row corpus, and at any scale it taxes the
     # targeted ~32-row occupancy. Hash-repartition on a single packed
     # group key + sort-within-partition gives the contiguous-groups
     # layout; mapInPandas slices hundreds of groups per Arrow batch with
     # one stack/normalize per batch, carrying the batch-tail group
-    # forward until its key changes. Exchange volume and screened pair
-    # space are identical to the grouped form.
+    # forward until its key changes.
     # bkt gets 32 bits in the packed key — see the _lsh_screened_pairs
-    # assert: n_planes > 32 would merge buckets across tables (ADVICE r11)
+    # assert: n_planes > 32 would merge buckets across tables
     assert n_planes <= 32, f"packed (tbl,bkt) key needs n_planes <= 32, got {n_planes}"
     key = F.col("tbl").cast("long") * F.lit(4294967296) + F.col("bkt")
     tagged = (
@@ -1786,10 +1637,9 @@ def _knn_screened_candidates(
         def emit(ids, mat):
             if len(ids) < 2:
                 # singleton bucket: the self row is masked to -2 and
-                # nothing survives the sentinel cut (grouped-form parity)
+                # nothing survives the sentinel cut
                 return None
-            u = _unit_rows(mat)
-            out_q, out_p, out_c = topk_keep(ids, ids, u, u)
+            out_q, out_p, out_c = topk_keep(ids, _unit_rows(mat))
             if not out_q or not sum(len(a) for a in out_q):
                 return None
             return pd.DataFrame(
@@ -1863,7 +1713,6 @@ def embedding_knn_classify_bulk(
     spark: SparkSession,
     sf_dir: str,
     k: int = KNN_K,
-    probe: bool = False,
     force_screen_rerank: bool | None = None,
     quantize_screen: bool | None = None,
 ) -> DataFrame:
@@ -1890,12 +1739,11 @@ def embedding_knn_classify_bulk(
     scores above it are 6-decimal roundings of a float64 cosine on both
     paths (see the rerank-gap caveat under ``force_screen_rerank``).
 
-    ``probe`` (default False): Hamming-1 multi-probe multiplies the
-    probe-side fan-out by (1+planes) — the right recall/cost trade for a
-    SMALL query set (ann_lsh_topk uses it), but at bulk scale it turns
-    ~128 candidates/vector into ~1500 (measured: the 80k smoke ran 10×
-    longer); with every vector already OR-matched across N_TABLES
-    independent tables, table diversity supplies the recall instead.
+    No Hamming-1 multi-probe: it suits a SMALL query set (ann_lsh_topk
+    uses it), but at bulk scale it turns ~128 candidates/vector into
+    ~1500 (measured: the 80k smoke ran 10× longer); with every vector
+    already OR-matched across N_TABLES independent tables, table
+    diversity supplies the recall instead.
 
     ``quantize_screen`` (None = dispatch on _SCREEN_QUANT_CUTOFF) ships
     the int16-quantized payload through the screen shuffle above 1M rows
@@ -1952,7 +1800,7 @@ def embedding_knn_classify_bulk(
     heaviest = n * N_TABLES * screen_row_units if screen_rerank else n * k * N_TABLES * 8
     spark = tuned_session(spark, heaviest)
     emb = _with_norm(load_table(spark, "embeddings", sf_dir, spread=SPREAD_MIN_EMB_ROWS))
-    screened = _knn_screened_candidates(emb, n_planes, dim, k, probe, quantize=quantize)
+    screened = _knn_screened_candidates(emb, n_planes, dim, k, quantize=quantize)
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     if screen_rerank:
         # dedup across tables keeps the LARGEST matmul cos (same pair,

@@ -742,9 +742,9 @@ PIPELINE_ORACLES["embedding_knn_classify"] = f"""
 """
 
 # embedding_knn_classify_bulk: the bulk twin — EVERY vector is a query, so
-# candidates are the direct sign-LSH bucket collisions (probe=False is the
-# operator default: no Hamming-1 fan-out; plane weights / packing are the
-# ann_lsh_topk oracle's verbatim). The operator's in-bucket matmul screen
+# candidates are the direct sign-LSH bucket collisions (no Hamming-1
+# fan-out; plane weights / packing are the ann_lsh_topk oracle's
+# verbatim). The operator's in-bucket matmul screen
 # is a pure optimization, not a semantic: anything it drops sits strictly
 # below its own bucket's top-k by more than the float margin, hence below
 # the GLOBAL top-k (proof in _knn_screened_candidates), so the oracle may

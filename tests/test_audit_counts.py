@@ -1,4 +1,5 @@
-"""Pin tools/audit_plans.plan_counts against a committed plan dump.
+"""Pin tools/audit_plans.plan_counts against a committed plan dump, and
+the join-baseline comparison that fails the audit on a new join.
 
 The r11 audit counted joins with a bare 'SortMergeJoin (' pattern, but
 formatted-plan join tree-lines interleave the join type between name and
@@ -16,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from audit_plans import plan_counts  # noqa: E402
+from audit_plans import join_regressions, plan_counts  # noqa: E402
 
 _REPO = os.path.join(os.path.dirname(__file__), "..")
 
@@ -72,3 +73,21 @@ def test_mid_line_mention_not_counted():
         ("Arguments: reads Exchange (9) output", "exch"),
     ]:
         assert plan_counts(line + "\n")[key] == 0, line
+
+
+def test_join_regression_flags_one_extra_smj():
+    rows = [
+        {"q": "a", "smj": 2, "bnlj": 0},
+        {"q": "b", "smj": 0, "bnlj": 0},
+    ]
+    assert join_regressions(rows, {"a": {"smj": 1}}) == [{"q": "a", "smj": (2, 1)}]
+
+
+def test_join_regression_equal_counts_not_flagged():
+    rows = [{"q": "a", "smj": 1, "bnlj": 1}, {"q": "b", "smj": 0, "bnlj": 0}]
+    assert join_regressions(rows, {"a": {"smj": 1, "bnlj": 1}}) == []
+
+
+def test_join_regression_missing_query_baseline_is_zero():
+    rows = [{"q": "new", "smj": 0, "bnlj": 1}, {"q": "broken", "err": "boom"}]
+    assert join_regressions(rows, {}) == [{"q": "new", "bnlj": (1, 0)}]

@@ -22,13 +22,17 @@ from roar_spark.catalog import load_table
 from roar_spark.operators.similarity import (
     _lsh_candidate_pairs,
     _with_norm,
+    dedup_emb_planes_for,
     dedup_embedding_lsh,
-    n_planes_for,
 )
 
 DIM = 64
 TIGHT_THRESHOLD = 0.9
 N_PLANTED = 10
+# The operator has one pair space, probe-free banding; tests that once
+# ran per pair space keep it as their single parameter so their ids stay
+# stable.
+PAIR_SPACE = pytest.mark.parametrize("pair_space", ["probe_free"])
 
 
 def _planted_dir(tmp_path_factory, n: int) -> str:
@@ -57,17 +61,14 @@ def _planted_dir(tmp_path_factory, n: int) -> str:
     return str(out)
 
 
-@pytest.mark.parametrize("probing", [False, True], ids=["probe_free", "probed"])
-def test_lsh_path_equals_exact_path_at_tight_threshold(spark, tmp_path_factory, probing):
-    """Both banded pair spaces — the r10 probe-free default (24 narrow
-    tables, Hamming-0) and the r6–r9 probed baseline (8 wide tables,
-    Hamming≤1) — must reproduce the exact path's output on the planted
-    corpus at the tight threshold."""
+@PAIR_SPACE
+def test_lsh_path_equals_exact_path_at_tight_threshold(spark, tmp_path_factory, pair_space):
+    """The banded pair space (24 narrow tables, Hamming-0) must reproduce
+    the exact path's output on the planted corpus at the tight
+    threshold."""
     d = _planted_dir(tmp_path_factory, 2000)
     exact = dedup_embedding_lsh(spark, d, threshold=TIGHT_THRESHOLD, force_lsh=False).collect()
-    lsh = dedup_embedding_lsh(
-        spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True, force_probing=probing
-    ).collect()
+    lsh = dedup_embedding_lsh(spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True).collect()
     assert [r.vec_id for r in exact] == [r.vec_id for r in lsh]
     # the corpus actually exercised the dedup: every planted larger id dropped
     kept = {r.vec_id for r in lsh}
@@ -76,19 +77,17 @@ def test_lsh_path_equals_exact_path_at_tight_threshold(spark, tmp_path_factory, 
     assert len(kept) == 2000 - N_PLANTED
 
 
-@pytest.mark.parametrize("probing", [False, True], ids=["probe_free", "probed"])
-def test_staged_screen_equals_single_job_screen(spark, tmp_path_factory, probing):
+@PAIR_SPACE
+def test_staged_screen_equals_single_job_screen(spark, tmp_path_factory, pair_space):
     """The per-table STAGED screen (the single-box disk lever) must
     produce exactly the single-job screen's survivors — same pair space,
     same keep-set; only the peak live shuffle differs."""
     d = _planted_dir(tmp_path_factory, 2000)
     single = dedup_embedding_lsh(
-        spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True,
-        force_staged=False, force_probing=probing,
+        spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True, force_staged=False
     ).collect()
     staged = dedup_embedding_lsh(
-        spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True,
-        force_staged=True, force_probing=probing,
+        spark, d, threshold=TIGHT_THRESHOLD, force_lsh=True, force_staged=True
     ).collect()
     assert [r.vec_id for r in single] == [r.vec_id for r in staged]
     kept = {r.vec_id for r in staged}
@@ -96,10 +95,11 @@ def test_staged_screen_equals_single_job_screen(spark, tmp_path_factory, probing
 
 
 def test_probe_free_screen_fanout_is_exactly_tables_per_vector(spark, tmp_path_factory):
-    """The whole point of probe-free banding (r10): the replicated screen
+    """The whole point of probe-free banding: the replicated screen
     payload is tables·n entries — no probe expansion, no plain/probe
-    sides. The probed form's fan-out is tables·(2 + ~planes/2)·n; at 16M
-    that was 92 copies/vector and the repo's most expensive shuffle."""
+    sides. A Hamming≤1 probed space fans out tables·(2 + ~planes/2)·n;
+    at 16M that was 92 copies/vector and the repo's most expensive
+    shuffle."""
     from roar_spark.operators.similarity import (
         DEDUP_EMB_TABLES_PF,
         _bucket_ids,
@@ -118,16 +118,18 @@ def test_probe_free_screen_fanout_is_exactly_tables_per_vector(spark, tmp_path_f
 
 
 def test_candidate_volume_grows_subquadratically(spark, tmp_path_factory):
+    """Candidate volume of the pair space the operator screens: exact
+    (tbl, bkt) collisions over DEDUP_EMB_TABLES_PF tables at the
+    operator's plane count."""
     counts = {}
     for n in (1000, 4000):
         d = _planted_dir(tmp_path_factory, n)
         emb = _with_norm(load_table(spark, "embeddings", d))
-        counts[n] = _lsh_candidate_pairs(emb, n_planes_for(n), DIM).count()
-    # 4x the rows: quadratic candidates grow 16x; measured growth on random
-    # background corpora is 8.3x here (small-n saturation inflates the base:
-    # at n=1000 most pairs are candidates) falling to 5.8x by n=8k..32k,
-    # with candidate fraction 0.60 -> 0.26 -> 0.096 at 2k/8k/32k. 12x is
-    # the regression line: a quadratic rewrite trips it, measured noise
+        counts[n] = _lsh_candidate_pairs(emb, dedup_emb_planes_for(n), DIM).count()
+    # 4x the rows: quadratic candidates grow 16x; measured here 388,138 ->
+    # 2,631,154 pairs = 6.8x (small-n saturation inflates the base: at
+    # n=1000 78% of all pairs are candidates, 33% at n=4000). 12x is the
+    # regression line: a quadratic rewrite trips it, measured noise
     # doesn't.
     assert counts[4000] < 12 * counts[1000], counts
     # and the candidate set is a strict subset of all pairs, not a rename
@@ -135,10 +137,10 @@ def test_candidate_volume_grows_subquadratically(spark, tmp_path_factory):
 
 
 def test_lsh_path_plan_shape(spark):
-    # probe-free pair stage: the SORTED-STREAM MapInPandas screen (one
-    # Python call per Arrow batch, not per bucket group — r10 event-log
-    # fix) plus the hash matmul; no per-group FlatMapGroupsInPandas, no
-    # row-at-a-time Python, no cartesian/nested-loop join anywhere
+    # the pair stage: the SORTED-STREAM MapInPandas screen (one Python
+    # call per Arrow batch, not per bucket group) plus the hash matmul; no
+    # per-group FlatMapGroupsInPandas, no row-at-a-time Python, no
+    # cartesian/nested-loop join anywhere
     df = dedup_embedding_lsh(spark, "/root/testdata/sf0.001", force_lsh=True)
     p = df._jdf.queryExecution().executedPlan().toString()
     # exactly one stream-screen MapInPandas; the hash matmul MapInPandas
@@ -146,14 +148,6 @@ def test_lsh_path_plan_shape(spark):
     # cached plan is PRINTED per consumer but computed once)
     assert p.count("MapInPandas screen_stream") == 1
     assert "FlatMapGroupsInPandas" not in p
-    assert "BatchEvalPython" not in p
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    # the probed A/B baseline keeps the grouped form
-    df = dedup_embedding_lsh(
-        spark, "/root/testdata/sf0.001", force_lsh=True, force_probing=True
-    )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("FlatMapGroupsInPandas") == 1
     assert "BatchEvalPython" not in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
@@ -215,54 +209,9 @@ def test_quantized_screen_margin_covers_renormalized_drift(dim):
     assert worst <= margin, (worst, margin, dim)
 
 
-def test_higher_probe_covers_same_pairs_as_full_probe(spark, tmp_path_factory):
-    """probe="higher" (upward-only Hamming-1 fan-out, r6) must produce the
-    SAME candidate pair set as full probing — it only removes the second
-    orientation of each unordered bucket pair, never coverage. Property-
-    pinned directly on _lsh_candidate_pairs over a seeded corpus, not just
-    implied by the e2e output-equality test."""
-    from pyspark.sql import functions as F
-
-    from roar_spark.operators.similarity import (
-        _bucket_ids,
-        _entries_from_buckets,
-        _with_norm,
-    )
-
-    d = _planted_dir(tmp_path_factory, 400)
-    emb = _with_norm(load_table(spark, "embeddings", d))
-    n_planes = 6
-    wb = _bucket_ids(emb, n_planes, DIM).persist()
-    wb.count()
-
-    def pairs(probe_mode):
-        left = _entries_from_buckets(wb, n_planes, probe=probe_mode).select(
-            F.col("vec_id").alias("id_l"), "tbl", "bkt"
-        )
-        right = _entries_from_buckets(wb, n_planes, probe=False).select(
-            F.col("vec_id").alias("id_r"), "tbl", "bkt"
-        )
-        got = (
-            left.join(right, ["tbl", "bkt"])
-            .filter(F.col("id_l") != F.col("id_r"))
-            .select(
-                F.least("id_l", "id_r").alias("a"),
-                F.greatest("id_l", "id_r").alias("b"),
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted((r.a, r.b) for r in got)
-
-    full = pairs(True)
-    higher = pairs("higher")
-    wb.unpersist()
-    assert higher == full and len(full) > 0
-
-
 # ---------------------------------------------------------------------------
-# Near-threshold recall pin (r10 verdict item 4): the r10 default flip to
-# probe-free banding trades wide-angle recall for 2-4x cost (documented in
+# Near-threshold recall pin: probe-free banding trades wide-angle recall
+# for 2-4x cost against the deleted Hamming≤1 probed space (documented in
 # SCALE.md: cos 0.90 candidate recall .863 -> .782 at the 16M config), but
 # only the >=0.999-cos regime was test-pinned — a future config change
 # could erode mid-threshold recall silently. These pins run the FULL
@@ -279,10 +228,7 @@ RECALL_CORPUS_ROWS = 16_000_000  # derive the 16M banding config
 # r10-documented candidate recall at the 16M config (SCALE.md r10 table),
 # minus the verdict's 2-pt tolerance: the hard floor a config change may
 # not silently cross.
-RECALL_FLOORS = {
-    False: {0.90: 0.782 - 0.02, 0.93: 0.921 - 0.02, 0.95: 0.978 - 0.02},
-    True: {0.90: 0.863 - 0.02, 0.93: 0.953 - 0.02, 0.95: 0.988 - 0.02},
-}
+RECALL_FLOORS = {0.90: 0.782 - 0.02, 0.93: 0.921 - 0.02, 0.95: 0.978 - 0.02}
 
 
 def _planted_cos_dir(tmp_path_factory, n_pairs: int, cos: float) -> str:
@@ -318,17 +264,12 @@ def _planted_cos_dir(tmp_path_factory, n_pairs: int, cos: float) -> str:
     return str(out)
 
 
-@pytest.mark.parametrize("probing", [False, True], ids=["probe_free", "probed"])
+@PAIR_SPACE
 @pytest.mark.parametrize("cos", [0.90, 0.93, 0.95])
 def test_near_threshold_recall_pinned_at_scale_config(
-    spark, tmp_path_factory, probing, cos
+    spark, tmp_path_factory, pair_space, cos
 ):
-    from roar_spark.operators.similarity import (
-        DEDUP_EMB_PF_PLANES_DELTA,
-        DEDUP_EMB_TABLES,
-        DEDUP_EMB_TABLES_PF,
-        _MIN_PLANES,
-    )
+    from roar_spark.operators.similarity import DEDUP_EMB_TABLES_PF
     from tools.lsh_recall_sweep import model
 
     n_pairs = 1000
@@ -342,22 +283,15 @@ def test_near_threshold_recall_pinned_at_scale_config(
             d,
             threshold=cos - 0.005,
             force_lsh=True,
-            force_probing=probing,
             force_corpus_rows=RECALL_CORPUS_ROWS,
         ).collect()
     }
     detected = sum(1 for i in range(n_pairs) if 2 * i + 1 not in kept)
     recall = detected / n_pairs
     # (1) model validity through the full operator
-    if probing:
-        expected = model(cos, DEDUP_EMB_TABLES, n_planes_for(RECALL_CORPUS_ROWS), True)
-    else:
-        planes = max(
-            _MIN_PLANES,
-            n_planes_for(RECALL_CORPUS_ROWS) - DEDUP_EMB_PF_PLANES_DELTA,
-        )
-        expected = model(cos, DEDUP_EMB_TABLES_PF, planes, False)
-    assert recall >= expected - 0.02, (recall, expected, probing, cos)
+    planes = dedup_emb_planes_for(RECALL_CORPUS_ROWS)
+    expected = model(cos, DEDUP_EMB_TABLES_PF, planes, False)
+    assert recall >= expected - 0.02, (recall, expected, pair_space, cos)
     # (2) the fixed documented floor — catches a silent config erosion
     # even when the model tracks the new config
-    assert recall >= RECALL_FLOORS[probing][cos], (recall, probing, cos)
+    assert recall >= RECALL_FLOORS[cos], (recall, pair_space, cos)

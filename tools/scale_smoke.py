@@ -78,17 +78,6 @@ def _dedup_embedding_lsh_tight(spark, d):
     return dedup_embedding_lsh(spark, d, threshold=0.9, force_lsh=True)
 
 
-def _dedup_embedding_lsh_probed(spark, d):
-    """The r6–r9 Hamming<=1 probed screen (8 wide tables, ~92 entry
-    copies/vector at 16M) — kept as the A/B baseline for the r10
-    probe-free banding (24 narrow tables, 24 copies/vector)."""
-    from roar_spark.operators.similarity import dedup_embedding_lsh
-
-    return dedup_embedding_lsh(
-        spark, d, threshold=0.9, force_lsh=True, force_probing=True
-    )
-
-
 # named ops not in the registry (parameterized variants)
 def _knn_bulk(spark, d):
     from roar_spark.operators.similarity import embedding_knn_classify_bulk
@@ -98,7 +87,6 @@ def _knn_bulk(spark, d):
 
 EXTRA_OPS = {
     "dedup_embedding_lsh@0.9": _dedup_embedding_lsh_tight,
-    "dedup_embedding_lsh@0.9probed": _dedup_embedding_lsh_probed,
     "embedding_knn_classify_bulk": _knn_bulk,
 }
 
@@ -114,7 +102,6 @@ EMB_ONLY_OPS = {
     "embedding_knn_classify",
     "embedding_knn_classify_bulk",
     "dedup_embedding_lsh@0.9",
-    "dedup_embedding_lsh@0.9probed",
     "sim_cosine_pairs",
 }
 

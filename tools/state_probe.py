@@ -19,6 +19,7 @@ Usage:
 
 Manual tool (minutes of wall-clock at 1M keys); results recorded in
 SCALE.md. Run one key-count per invocation for clean disk accounting.
+The work dir is removed and the Spark session stopped when the run ends.
 """
 
 from __future__ import annotations
@@ -73,76 +74,83 @@ def main() -> None:
     src = f"{work}/src"
     ckpt = f"{work}/ckpt"
     os.makedirs(src, exist_ok=True)
+    spark = None
+    try:
+        # source: rows_per_key events per key, seq ascending so the final kept
+        # window is deterministic; chunked files keep driver memory flat
+        n, rpk = args.keys, args.rows_per_key
+        chunk_keys = max(1, min(n, 2_000_000 // rpk))
+        for start in range(0, n, chunk_keys):
+            ck = min(chunk_keys, n - start)
+            keys = np.repeat(np.arange(start, start + ck, dtype=np.int64), rpk)
+            seqs = np.tile(np.arange(rpk, dtype=np.int64), ck)
+            vals = (seqs + keys % 97).astype("float64")
+            pq.write_table(
+                pa.table(
+                    {
+                        "user_id": pa.array(keys),
+                        "kafka_offset": pa.array(seqs),
+                        "value": pa.array(vals),
+                    }
+                ),
+                f"{src}/part-{start // chunk_keys:05d}.parquet",
+            )
 
-    # source: rows_per_key events per key, seq ascending so the final kept
-    # window is deterministic; chunked files keep driver memory flat
-    n, rpk = args.keys, args.rows_per_key
-    chunk_keys = max(1, min(n, 2_000_000 // rpk))
-    for start in range(0, n, chunk_keys):
-        ck = min(chunk_keys, n - start)
-        keys = np.repeat(np.arange(start, start + ck, dtype=np.int64), rpk)
-        seqs = np.tile(np.arange(rpk, dtype=np.int64), ck)
-        vals = (seqs + keys % 97).astype("float64")
-        pq.write_table(
-            pa.table(
-                {
-                    "user_id": pa.array(keys),
-                    "kafka_offset": pa.array(seqs),
-                    "value": pa.array(vals),
-                }
-            ),
-            f"{src}/part-{start // chunk_keys:05d}.parquet",
+        extra = dict(kv.split("=", 1) for kv in args.conf)
+        spark = get_spark(app_name="roar_state_probe", extra_conf=extra or None)
+        warm_python_workers(spark)
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
 
-    extra = dict(kv.split("=", 1) for kv in args.conf)
-    spark = get_spark(app_name="roar_state_probe", extra_conf=extra or None)
-    warm_python_workers(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+        stream = (
+            spark.readStream.schema("user_id bigint, kafka_offset bigint, value double")
+            .parquet(src)
+        )
+        out = recent_buffer(stream, cap=args.cap)
+        t0 = time.perf_counter()
+        q = (
+            out.writeStream.outputMode("update")
+            .format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        wall = time.perf_counter() - t0
+        progress = q.recentProgress[-1] if q.recentProgress else None
+        state_ops = (progress or {}).get("stateOperators") or []
+        metrics = state_ops[0] if state_ops else {}
+        ckpt_state_bytes = _dir_bytes(f"{ckpt}/state")
 
-    stream = (
-        spark.readStream.schema("user_id bigint, kafka_offset bigint, value double")
-        .parquet(src)
-    )
-    out = recent_buffer(stream, cap=args.cap)
-    t0 = time.perf_counter()
-    q = (
-        out.writeStream.outputMode("update")
-        .format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
-    progress = q.recentProgress[-1] if q.recentProgress else None
-    state_ops = (progress or {}).get("stateOperators") or []
-    metrics = state_ops[0] if state_ops else {}
-    ckpt_state_bytes = _dir_bytes(f"{ckpt}/state")
-
-    report = {
-        "keys": n,
-        "rows_per_key": rpk,
-        "cap": args.cap,
-        "conf": extra,
-        "wall_s": round(wall, 1),
-        "numRowsTotal": metrics.get("numRowsTotal"),
-        "stateBytes": metrics.get("stateOnCurrentVersionSizeBytes"),
-        "custom": {
-            k: v
-            for k, v in (metrics.get("customMetrics") or {}).items()
-            if "SstFileSize" in k or "TotalMemUsage" in k or "CommitLatency" in k
-            or "ZipFile" in k
-        },
-        "checkpoint_state_bytes": ckpt_state_bytes,
-        "checkpoint_bytes_per_key": round(ckpt_state_bytes / n, 1),
-    }
-    sst = (metrics.get("customMetrics") or {}).get("rocksdbSstFileSize")
-    if sst:
-        report["sst_bytes_per_key"] = round(sst / n, 1)
-    print(json.dumps(report))
+        report = {
+            "keys": n,
+            "rows_per_key": rpk,
+            "cap": args.cap,
+            "conf": extra,
+            "wall_s": round(wall, 1),
+            "numRowsTotal": metrics.get("numRowsTotal"),
+            "stateBytes": metrics.get("stateOnCurrentVersionSizeBytes"),
+            "custom": {
+                k: v
+                for k, v in (metrics.get("customMetrics") or {}).items()
+                if "SstFileSize" in k or "TotalMemUsage" in k or "CommitLatency" in k
+                or "ZipFile" in k
+            },
+            "checkpoint_state_bytes": ckpt_state_bytes,
+            "checkpoint_bytes_per_key": round(ckpt_state_bytes / n, 1),
+        }
+        sst = (metrics.get("customMetrics") or {}).get("rocksdbSstFileSize")
+        if sst:
+            report["sst_bytes_per_key"] = round(sst / n, 1)
+        print(json.dumps(report))
+    finally:
+        # the work dir (source parquet + checkpoint) is only scratch for
+        # this run: the report above is the result
+        if spark is not None:
+            spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":
